@@ -12,13 +12,17 @@ pipeline operators).
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import re
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _HERE)
 
 import fifteenmc_spark.operators  # noqa: E402,F401  (registers all query modules)
 from fifteenmc_spark.operators.relational import QUERIES  # noqa: E402
@@ -29,98 +33,28 @@ def entry(spark: SparkSession) -> DataFrame:
     return QUERIES["d6_groupby_agg"].build(spark, "/root/testdata/sf0.001")
 
 
-# The driver checks a bounded window of queries per round (50 in r02).
-# Queries with no driver CORRECTNESS row yet come first so every declared
-# query accumulates at least one driver-checked green row across rounds.
-_CHECK_FIRST = (
-    # r16 rotation.  Lead: queries whose PLAN changes this round (x9 phase-1
-    # prefilter restored to the h60 key; v17/v23 stacked rank tail) plus the
-    # three r15-plan-changed queries the r15 window missed (v17/v18/v22
-    # recall-stack broadcasts — r15 verdict item 2).
-    "x9_span_dedup",
-    "x9_span_dedup_sampled",
-    "x9_span_dedup_prefiltered",
-    "v17_encoding_recall",
-    "v23_tencoding_recall",
-    "v18_ivfpq_nprobe_sweep",
-    "v22_tivf_nprobe_sweep",
-    "t9_unigram_logprob",
-    # newest driver row is r13 — the backlog tail the r15 50-query window
-    # could not reach (alphabetical)
-    "d25_scalar_subquery",
-    "d26_asof_join",
-    "d28_sessionize",
-    "d9_cube",
-    "g1_grid_tiles",
-    "g4_tile_assign",
-    "m1_asset_meta",
-    "p7_dedup_apply",
-    "v10_embedding_validity",
-    "v16_rivfpq_topk",
-    "v19_tivf_topk",
-    "v21_tivfpq_topk",
-    "v29_adaptive_filtered_topk",
-    "v8_embedding_clusters",
-    "x1_dedup_exact",
-    "x2_minhash_signature",
-    "x3_minhash_lsh_pairs",
-    "x3_minhash_lsh_pairs_16",
-    "x4_simhash",
-    "x4_simhash_64",
-    "x5_ngram_jaccard",
-    "x5_ngram_jaccard_capped",
-    "x6_simhash_hamming",
-    "x6_simhash_hamming_64",
-    "x7_hamming_clusters",
-    "x7_jaccard_clusters",
-    "x8_decontaminate",
-    # newest driver row is r14 — fill the 50-query window (alphabetical;
-    # the tail past the window leads the next rotation)
-    "d10_rank_dense_ntile",
-    "d11_running_total",
-    "d1_scan_filter",
-    "d27_range_join",
-    "d2_inner_join",
-    "d30_salted_join",
-    "d31_sketch_bounds",
-    "d32_full_outer",
-    "d3_dim_chain_join",
-    "d4_left_outer",
-    "d5_anti_join",
-    "d5_semi_join",
-    "d6_groupby_agg",
-    "d7_count_distinct",
-    "d8_median",
-    "d9_rollup",
-    "g5_tile_occupancy",
-    "g6_zorder_layout",
-    "p2_hash_split",
-    "p3_pack_sequences",
-    "p5_chunk_dedup",
-    "p9_temperature_mix",
-    "t10_gopher_rules",
-    "t11_bpe_pretoken_count",
-    "t12_winnowing_fingerprint",
-    "t8_length_quantiles",
-    "v11_pq_topk",
-    "v13_ivfpq_topk",
-    "v15_dedup_apply",
-    "v1_cosine_topk",
-    "v25_serving_tivf_topk",
-    "v26_serving_ivfpq_topk",
-    "v27_filtered_tivf_topk",
-    "v3_embedding_near_dup",
-    "v5_ivf_topk",
-    "v6_lsh_recall",
-    "x10_link_pagerank",
-    "x7_near_dup_clusters",
-)
+def _check_order(names: list[str], root: str = _HERE) -> list[str]:
+    """``names`` in the order a correctness check should run them, from
+    the CORRECTNESS_r*.json records in ``root``: a check that covers a
+    bounded window of queries per round should reach the stalest first,
+    so queries with no ``hash_match: true`` row come first, then the
+    rest by the newest round in which they passed, oldest first.  Ties
+    keep the order of ``names``."""
+    last_pass: dict[str, int] = {}
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
+        if m is None:
+            continue
+        with open(path) as f:
+            rows = json.load(f)
+        for name, row in rows.items():
+            if isinstance(row, dict) and row.get("hash_match") is True:
+                last_pass[name] = max(last_pass.get(name, -1), int(m.group(1)))
+    return sorted(names, key=lambda n: last_pass.get(n, -1))
 
 
 def _ordered() -> dict:
-    out = {n: QUERIES[n] for n in _CHECK_FIRST if n in QUERIES}
-    out.update(QUERIES)
-    return out
+    return {n: QUERIES[n] for n in _check_order(list(QUERIES))}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -21,6 +21,8 @@ NULL-tolerant aggregate() left fold (it must see ragged/NULL arrays).
 
 from __future__ import annotations
 
+import dataclasses
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, Window
@@ -194,7 +196,7 @@ def _gate_oracle(sql: str) -> str:
     JOIN, and comma-list forms alike (a `JOIN embeddings ea` that kept
     scanning the raw table would bypass the gate silently the moment an
     oracle sourced candidate rows through the join instead of re-fetching
-    already-gated vec_ids).  Asserts no raw reference survives the
+    already-gated vec_ids).  Raises if a raw reference survives the
     rewrite, so a future oracle spelling the table a new way fails loudly
     at registration instead of diverging quietly."""
     import re
@@ -204,16 +206,17 @@ def _gate_oracle(sql: str) -> str:
     # table is not self-rewritten to `FROM ve`.  Only FROM/JOIN forms are
     # rewritten — a comma-list rule (`, embeddings`) would also hit a
     # select-list column or alias literally named `embeddings`, and the
-    # trailing assert only catches UNDER-rewrites; so comma-list table
+    # trailing check only catches UNDER-rewrites; so comma-list table
     # references are simply not allowed in similarity oracles, and one
-    # that slips in fails the assert loudly at import time.
+    # that slips in fails the check loudly at import time.
     body = re.sub(r"\b(FROM|JOIN)\s+embeddings\b", r"\1 ve", sql)
     leftover = re.search(r"\bembeddings\b", body)
-    assert leftover is None, (
-        "raw `embeddings` reference survived the validity-gate rewrite "
-        "(comma-list table form? spell it as FROM/JOIN): "
-        f"...{body[max(0, leftover.start() - 60):leftover.end() + 20]}..."
-    )
+    if leftover is not None:
+        raise ValueError(
+            "raw `embeddings` reference survived the validity-gate rewrite "
+            "(comma-list table form? spell it as FROM/JOIN): "
+            f"...{body[max(0, leftover.start() - 60):leftover.end() + 20]}..."
+        )
     s = body.lstrip()
     if s.startswith("WITH RECURSIVE"):
         return body.replace("WITH RECURSIVE", f"WITH RECURSIVE {cte},", 1)
@@ -348,7 +351,8 @@ def lsh_bucket_table(e, n_planes: int = N_PLANES) -> "DataFrame":
     The testdata corpus has no |dot| < 1e-6 cases (re-checked when this
     form was A/B'd in).  Input embeddings are validity-gated at the scan
     (_emb), so every array is non-null and 64-dim."""
-    assert 1 <= n_planes <= 31
+    if not 1 <= n_planes <= 31:
+        raise ValueError(f"n_planes must be in [1, 31], got {n_planes}")
     coefs = np.array(
         [[_plane_coef(j, i) for j in range(n_planes)] for i in range(64)],
         dtype=np.float64,
@@ -552,52 +556,164 @@ N_CELLS = 8
 # deterministic coarse-quantizer seeds: vectors present at every sf (>=500)
 IVF_SEED_IDS = (7, 61, 113, 167, 229, 283, 337, 401)
 N_PROBE = 2
+TIVF_ITERS = 2  # spherical-Lloyd steps over the same deterministic sample
+# as the PQ codebook (vec_id % PQ_TRAIN_MOD == PQ_TRAIN_REM) — at 100 TB
+# both become hash-mod samples to a fixed budget; only determinism matters
+# for the oracle
+
+# v24's ncells axis: deterministic seed pool whose first k ids seed a
+# k-cell trained quantizer — the first 8 ARE IVF_SEED_IDS, so the
+# ncells=8 point IS the 8-cell trained quantizer and pins to v20's
+# trained row.  All ids exist at every SF (vec_id < 500) and are
+# pairwise distinct (checked below).
+TIVF_SEED_POOL = (
+    IVF_SEED_IDS
+    + (17, 79, 131, 191, 241, 307, 359, 421)
+    + (37, 99, 151, 211, 261, 327, 379, 441)
+    + (57, 119, 171, 231, 281, 347, 399, 461)
+)
+if len(set(TIVF_SEED_POOL)) != 32 or max(TIVF_SEED_POOL) >= 500:
+    raise ValueError(
+        "TIVF_SEED_POOL must be 32 pairwise-distinct vec_ids < 500 "
+        f"(got {len(set(TIVF_SEED_POOL))} distinct, max {max(TIVF_SEED_POOL)})"
+    )
+NCELLS_SWEEP = (4, 8, 16, 32)
+# The SERVING layout (v25/v26, serving.py): 32 trained cells off the
+# sweep pool's prefix, nprobe 8 = the 8-cell default's 25% scan fraction.
+# v24 measured each ncells step at that constant scan fraction before the
+# layout moved to it (8 -> 16 -> 32; recall figures in v24's description).
+V25_POOL = TIVF_SEED_POOL[:32]
+V25_NPROBE = len(V25_POOL) // 4
 
 
-def _ivf_cells_probes(spark, sf_dir, max_probe: int, nq: int = N_QUERY_VECS):
-    """Shared IVF front half for v5 (cell-probe search) and v9 (its recall
-    eval): (e, cells, probes).  ONE definition so the eval always measures
-    the index v5 actually builds — the seed set, the max-struct cell
-    tie-break (sim desc, cid asc), and the probe ranking can never drift
-    between the two queries.
+@dataclasses.dataclass(frozen=True)
+class Quantizer:
+    """A coarse quantizer: the ``seeds`` vectors refined by ``iters``
+    spherical-Lloyd steps over the deterministic sample (see
+    _spherical_lloyd_step).  iters=0 is the seed quantizer itself — its
+    centroids ARE the seed vectors cast to double, which is exact, and
+    both engines score cosine in double — so one centroid table, one
+    cells/probes builder and one SQL fragment serve every layout."""
+
+    seeds: tuple
+    iters: int
+
+    def key(self, table: str) -> str:
+        """Session-index key of this quantizer's ``table``: ivf_* for the
+        8-cell seed quantizer, tivf_* for trained ones, _c{n} for pools
+        other than IVF_SEED_IDS."""
+        base = {0: "ivf", TIVF_ITERS: "tivf"}.get(self.iters, f"tivf_i{self.iters}")
+        sfx = "" if self.seeds == IVF_SEED_IDS else f"_c{len(self.seeds)}"
+        return f"{base}_cents{sfx}" if table == "cents" else f"{base}{sfx}_{table}"
+
+
+SEED = Quantizer(IVF_SEED_IDS, 0)  # v5/v9/v13/v16/v17/v18: calibration baseline
+TRAINED = Quantizer(IVF_SEED_IDS, TIVF_ITERS)  # v19-v23: same 8 cells, trained
+SERVING = Quantizer(V25_POOL, TIVF_ITERS)  # v25-v29 and serving.py
+
+
+def _spherical_lloyd_step(samp, cw):
+    """One spherical-k-means refinement for the COARSE quantizer: assign
+    every training vector to its argmax-cosine centroid (score =
+    dot/‖c‖ — the ‖x‖ factor is constant under the argmax; dot and norm
+    via the deterministic left-fold so both engines pick identical
+    cells, ties to the lower cid), then recompute each centroid as the
+    per-dimension mean of its members through the 1e6-scaled BIGINT sum
+    + ONE double division — _lloyd_step's integer-exact iteration
+    boundary at M=1 over full vectors.  Cosine assignment is scale-
+    invariant in the centroid, so the mean needs NO renormalization
+    (spherical k-means' normalize step only rescales c, which argmax
+    cos ignores) — the iteration boundary stays purely the rounded
+    mean.  Empty cells keep their previous centroid."""
+    scored = samp.crossJoin(F.broadcast(cw)).select(
+        "vec_id",
+        "cid",
+        "xe",
+        (dot_double(F.col("xe"), F.col("cwe")) / norm2(F.col("cwe"))).alias("score"),
+    )
+    wpick = Window.partitionBy("vec_id").orderBy(F.col("score").desc(), "cid")
+    assigned = (
+        scored.withColumn("rn", F.row_number().over(wpick))
+        .where(F.col("rn") == 1)
+        .select("cid", "xe")
+    )
+    mn = assigned.select("cid", F.posexplode("xe").alias("j", "v")).groupBy("cid", "j").agg(
+        F.sum(F.round(F.col("v") * 1e6).cast("bigint")).alias("s6"),
+        F.count(F.lit(1)).alias("cnt"),
+    )
+    nc = (
+        mn.select("cid", "j", (F.round(F.col("s6") / F.col("cnt")) / 1e6).alias("v"))
+        .groupBy("cid")
+        .agg(F.array_sort(F.collect_list(F.struct("j", "v"))).alias("a"))
+        .select("cid", F.expr("transform(a, x -> x.v)").alias("nxt"))
+    )
+    return (
+        cw.select("cid", F.col("cwe").alias("prev"))
+        .join(nc, "cid", "left")
+        .select("cid", F.coalesce("nxt", "prev").alias("cwe"))
+    )
+
+
+def _tivf_centroids_plan(spark, sf_dir, quantizer: Quantizer):
+    """Coarse centroids (cid, cwe DOUBLE[]): the quantizer's seed vectors
+    refined by its ``iters`` spherical-Lloyd steps (none for SEED)."""
+    xe = (
+        _emb(spark, sf_dir)
+        .select("vec_id", F.col("embedding").cast("array<double>").alias("xe"))
+    )
+    cw = xe.where(F.col("vec_id").isin(*quantizer.seeds)).select(
+        F.col("vec_id").alias("cid"), F.col("xe").alias("cwe")
+    )
+    if quantizer.iters:
+        samp = xe.where(
+            F.col("vec_id") % PQ_TRAIN_MOD == PQ_TRAIN_REM
+        ).localCheckpoint(eager=False)
+        for _ in range(quantizer.iters):
+            cw = _spherical_lloyd_step(samp, cw)
+    return cw
+
+
+def _tivf_centroids(spark, sf_dir, quantizer: Quantizer):
+    """The centroid table (cid, cwe), session-cached — shared by the
+    batch index (_tivf_cells_probes), the residual codes (_rpq_index)
+    and the streaming serving tier (which collects it as the
+    broadcast-small closure constant)."""
+    return _session_cached(
+        spark,
+        sf_dir,
+        quantizer.key("cents"),
+        lambda: _tivf_centroids_plan(spark, sf_dir, quantizer).localCheckpoint(eager=False),
+    )
+
+
+def _tivf_cells_probes(
+    spark, sf_dir, quantizer: Quantizer, max_probe: int, nq: int = N_QUERY_VECS
+):
+    """(e, cells, probes): the IVF index of ``quantizer`` — every IVF,
+    IVFADC, eval and serving plan reads its cells and probes here, so
+    the tie-breaks and probe ranking can never drift between queries or
+    quantizers.
 
     Scores every vector against the broadcast centroids; argmax by
     (sim desc, cid asc) via a max-struct aggregate — map-side combinable,
-    the shuffle carries (vec_id, one struct), never the embeddings.
-
-    Both the score table and the cell assignment live in the session
-    index (lazy localCheckpoints): they ARE the IVF index — |corpus| ×
-    n_cells doubles and |corpus| ints — and v5 (search) and v9 (recall
-    eval) read the SAME materialization instead of each re-scoring the
-    corpus (the r7 bench's v5/v9 regression was exactly this pair of
-    rebuilds).  ``probes`` keeps the probe rank ``rn`` (1 = nearest
-    cell) up to ``max_probe``."""
+    the shuffle carries (vec_id, one struct), never the embeddings.  The
+    score table, the cell assignment and each probe list live in the
+    session index (lazy localCheckpoints): they ARE the IVF index —
+    |corpus| × n_cells doubles and |corpus| ints — so a search and its
+    recall eval read the SAME materialization instead of each re-scoring
+    the corpus.  ``probes`` keeps the probe rank ``rn`` (1 = nearest
+    cell) up to ``max_probe`` for the query vectors vec_id < ``nq``."""
     e = _emb(spark, sf_dir).select("vec_id", "embedding")
 
     def build_scored():
-        cents = e.where(F.col("vec_id").isin(*IVF_SEED_IDS)).select(
-            F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
-        )
+        cw = _tivf_centroids(spark, sf_dir, quantizer)
         return (
-            e.crossJoin(F.broadcast(cents))
-            .select(
-                "vec_id", "cid", cosine(F.col("embedding"), F.col("ce")).alias("sim")
-            )
+            e.crossJoin(F.broadcast(cw))
+            .select("vec_id", "cid", cosine(F.col("embedding"), F.col("cwe")).alias("sim"))
             .localCheckpoint(eager=False)
         )
 
-    scored = _session_cached(spark, sf_dir, "ivf_scored", build_scored)
-    cells, probes = _cells_probes(spark, sf_dir, scored, "ivf_", max_probe, nq)
-    return e, cells, probes
-
-
-def _cells_probes(spark, sf_dir, scored, key_prefix: str, max_probe: int, nq: int):
-    """(cells, probes) from a (vec_id, cid, sim) centroid-score table —
-    the quantizer-agnostic back half shared by the seed coarse quantizer
-    (_ivf_cells_probes) and the trained one (_tivf_cells_probes): the
-    max-struct cell pick, the probe ranking, and the session-index
-    checkpoints are identical; only the score table (and its cache key
-    prefix) differs."""
+    scored = _session_cached(spark, sf_dir, quantizer.key("scored"), build_scored)
 
     def build_cells():
         pick = F.max(
@@ -610,7 +726,7 @@ def _cells_probes(spark, sf_dir, scored, key_prefix: str, max_probe: int, nq: in
             .localCheckpoint(eager=False)
         )
 
-    cells = _session_cached(spark, sf_dir, f"{key_prefix}cells", build_cells)
+    cells = _session_cached(spark, sf_dir, quantizer.key("cells"), build_cells)
 
     def build_probes():
         wprobe = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("cid"))
@@ -623,9 +739,114 @@ def _cells_probes(spark, sf_dir, scored, key_prefix: str, max_probe: int, nq: in
         )
 
     sfx = "" if nq == N_QUERY_VECS else f"_q{nq}"
-    probes = _session_cached(spark, sf_dir, f"{key_prefix}probes{max_probe}{sfx}", build_probes)
-    return cells, probes
+    probes = _session_cached(
+        spark, sf_dir, quantizer.key(f"probes{max_probe}{sfx}"), build_probes
+    )
+    return e, cells, probes
 
+
+def _tivf_centroid_sql(quantizer: Quantizer, tag: str = "") -> str:
+    """WITH fragment mirroring _tivf_centroids_plan: the seed vectors and
+    ``iters`` unrolled spherical-Lloyd steps ending in ``{tag}tcw`` (cid,
+    cwe).  Same integer-exact 6-digit-mean iteration boundary as the PQ
+    codebook SQL, so both engines carry bitwise-identical centroids into
+    every assignment.  ``tag`` prefixes every CTE name so several
+    quantizers compose in one query (v20, v24)."""
+    parts = [
+        f"{tag}xt AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS xe FROM embeddings)",
+        f"""{tag}tcw_i0 AS (
+      SELECT vec_id AS cid, xe AS cwe FROM {tag}xt WHERE vec_id IN {quantizer.seeds})""",
+    ]
+    prev = f"{tag}tcw_i0"
+    for i in range(1, quantizer.iters + 1):
+        parts += [
+            f"""{tag}tasg_i{i} AS (
+      SELECT s.vec_id, c.cid, s.xe
+      FROM {tag}xt s, {prev} c
+      WHERE s.vec_id % {PQ_TRAIN_MOD} = {PQ_TRAIN_REM}
+      QUALIFY ROW_NUMBER() OVER (PARTITION BY s.vec_id
+          ORDER BY list_dot_product(s.xe, c.cwe)
+                   / SQRT(list_dot_product(c.cwe, c.cwe)) DESC, c.cid) = 1)""",
+            f"""{tag}tmn_i{i} AS (
+      SELECT cid, j,
+             CAST(SUM(CAST(ROUND(xe[j] * 1e6) AS BIGINT)) AS BIGINT) AS s6,
+             COUNT(*) AS cnt
+      FROM {tag}tasg_i{i}, UNNEST(generate_series(1, {EMB_DIM})) AS t(j)
+      GROUP BY cid, j)""",
+            f"""{tag}tnc_i{i} AS (
+      SELECT cid, LIST(ROUND(s6 / cnt) / 1e6 ORDER BY j) AS cwe
+      FROM {tag}tmn_i{i} GROUP BY cid)""",
+            f"""{tag}tcw_i{i} AS (
+      SELECT p.cid, COALESCE(n.cwe, p.cwe) AS cwe
+      FROM {prev} p LEFT JOIN {tag}tnc_i{i} n ON n.cid = p.cid)""",
+        ]
+        prev = f"{tag}tcw_i{i}"
+    parts.append(f"{tag}tcw AS (SELECT cid, cwe FROM {prev})")
+    return ",\n    ".join(parts)
+
+
+def _tivf_cells_probes_sql(quantizer: Quantizer, nq: int, max_probe: int, tag: str = "") -> str:
+    """WITH fragment mirroring _tivf_cells_probes: the centroid fragment,
+    then ``{tag}cells`` (vec_id, cell) and ``{tag}probes`` (qid, cell,
+    rn) for the query vectors vec_id < ``nq`` up to ``max_probe``."""
+    return f"""{_tivf_centroid_sql(quantizer, tag)},
+    {tag}ivfranked AS (
+      SELECT e.vec_id, c.cid,
+             ROW_NUMBER() OVER (PARTITION BY e.vec_id
+                 ORDER BY {_COS_SQL.format(a="e.embedding", b="c.cwe")} DESC, c.cid) AS rn
+      FROM embeddings e, {tag}tcw c),
+    {tag}cells AS (SELECT vec_id, cid AS cell FROM {tag}ivfranked WHERE rn = 1),
+    {tag}probes AS (SELECT vec_id AS qid, cid AS cell, rn FROM {tag}ivfranked
+                    WHERE vec_id < {nq} AND rn <= {max_probe})"""
+
+
+def _tivf_topk_plan(spark, sf_dir, quantizer: Quantizer, nprobe: int = N_PROBE):
+    """Cell-probe top-k over ``quantizer``'s cells — v5 (SEED), v19
+    (TRAINED) and v25 (SERVING at V25_NPROBE) are this one plan:
+    centroids broadcast, cells the partition key, a query reads
+    nprobe/ncells of the corpus and ranks exact cosine inside it."""
+    e, cells, probes = _tivf_cells_probes(spark, sf_dir, quantizer, nprobe)
+    probes = probes.drop("rn")
+    qv = e.where(F.col("vec_id") < N_QUERY_VECS).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
+    )
+    cand = (
+        F.broadcast(probes)
+        .join(cells, "cell")
+        .where(F.col("vec_id") != F.col("qid"))
+        .join(e, "vec_id")
+        .join(F.broadcast(qv), "qid")
+        .select("qid", "vec_id", cosine(F.col("qe"), F.col("embedding")).alias("sim"))
+    )
+    wrank = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("vec_id"))
+    return (
+        cand.select("qid", "vec_id", "sim", F.row_number().over(wrank).alias("rnk"))
+        .where(F.col("rnk") <= TOP_K)
+        .select("qid", "vec_id", "rnk", F.round("sim", 4).alias("sim"))
+        .orderBy("qid", "rnk")
+    )
+
+
+def _tivf_topk_sql(quantizer: Quantizer, nprobe: int = N_PROBE) -> str:
+    """The oracle of _tivf_topk_plan."""
+    return f"""
+    WITH {_tivf_cells_probes_sql(quantizer, N_QUERY_VECS, nprobe)},
+    qv AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
+           WHERE vec_id < {N_QUERY_VECS}),
+    cand AS (
+      SELECT p.qid, x.vec_id,
+             {_COS_SQL.format(a="qv.qe", b="e.embedding")} AS sim
+      FROM probes p
+      JOIN cells x ON x.cell = p.cell AND x.vec_id <> p.qid
+      JOIN embeddings e ON e.vec_id = x.vec_id
+      JOIN qv ON qv.qid = p.qid),
+    rr AS (
+      SELECT qid, vec_id, sim,
+             ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rnk
+      FROM cand)
+    SELECT qid, vec_id, rnk, ROUND(sim, 4) AS sim
+    FROM rr WHERE rnk <= {TOP_K} ORDER BY qid, rnk
+    """
 
 
 @_register(
@@ -649,33 +870,7 @@ def _cells_probes(spark, sf_dir, scored, key_prefix: str, max_probe: int, nq: in
     "the 10x corpus point.  Measured refusal: fusing v5's stages would "
     "re-derive the serving layout per query, which is exactly what the "
     "serving tier exists to amortize.",
-    f"""
-    WITH c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings
-               WHERE vec_id IN {IVF_SEED_IDS}),
-    ranked AS (
-      SELECT e.vec_id, c.cid,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_COS_SQL.format(a="e.embedding", b="c.ce")} DESC, c.cid) AS rn
-      FROM embeddings e, c),
-    cells AS (SELECT vec_id, cid AS cell FROM ranked WHERE rn = 1),
-    probes AS (SELECT vec_id AS qid, cid AS cell FROM ranked
-               WHERE vec_id < {N_QUERY_VECS} AND rn <= {N_PROBE}),
-    qv AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
-           WHERE vec_id < {N_QUERY_VECS}),
-    cand AS (
-      SELECT p.qid, x.vec_id,
-             {_COS_SQL.format(a="qv.qe", b="e.embedding")} AS sim
-      FROM probes p
-      JOIN cells x ON x.cell = p.cell AND x.vec_id <> p.qid
-      JOIN embeddings e ON e.vec_id = x.vec_id
-      JOIN qv ON qv.qid = p.qid),
-    rr AS (
-      SELECT qid, vec_id, sim,
-             ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rnk
-      FROM cand)
-    SELECT qid, vec_id, rnk, ROUND(sim, 4) AS sim
-    FROM rr WHERE rnk <= {TOP_K} ORDER BY qid, rnk
-    """,
+    _tivf_topk_sql(SEED),
     ("similarity", "ann", "ivf", "pipeline"),
 )
 def v5(spark, sf_dir):
@@ -687,26 +882,7 @@ def v5(spark, sf_dir):
     # oracle has no scheduler to pay; the plan (broadcast probes/
     # centroids, cell-pruned candidates, no corpus product — plan-gated)
     # is the shape that wins at 100×.
-    e, cells, probes = _ivf_cells_probes(spark, sf_dir, N_PROBE)
-    probes = probes.drop("rn")
-    qv = e.where(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    cand = (
-        F.broadcast(probes)
-        .join(cells, "cell")
-        .where(F.col("vec_id") != F.col("qid"))
-        .join(e, "vec_id")
-        .join(F.broadcast(qv), "qid")
-        .select("qid", "vec_id", cosine(F.col("qe"), F.col("embedding")).alias("sim"))
-    )
-    wrank = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("vec_id"))
-    return (
-        cand.select("qid", "vec_id", "sim", F.row_number().over(wrank).alias("rnk"))
-        .where(F.col("rnk") <= TOP_K)
-        .select("qid", "vec_id", "rnk", F.round("sim", 4).alias("sim"))
-        .orderBy("qid", "rnk")
-    )
+    return _tivf_topk_plan(spark, sf_dir, SEED)
 
 
 # ---------------------------------------------------------------------------
@@ -752,7 +928,8 @@ def v6(spark, sf_dir):
     # (vs. naively running lsh_recall per plane set = the brute-force v1
     # twice; measured 2.6 s → 1.3 s at sf0.1).
     lo, hi = RECALL_PLANE_SETS
-    assert lo < hi, "prefix-bucket fusion needs an ascending plane pair"
+    if not lo < hi:
+        raise ValueError(f"prefix-bucket fusion needs an ascending plane pair, got {lo, hi}")
     exact = _exact_topk(spark, sf_dir).select("qid", "vec_id")
     mask = (1 << lo) - 1
     sig = _sig(spark, sf_dir, hi).select(
@@ -937,16 +1114,7 @@ V9_MAX_PROBE = 2
     "the minimum probe rank that reaches the neighbor's cell aggregates "
     "to every nprobe's recall in a single groupBy.",
     f"""
-    WITH c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings
-               WHERE vec_id IN {IVF_SEED_IDS}),
-    ranked AS (
-      SELECT e.vec_id, c.cid,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_COS_SQL.format(a="e.embedding", b="c.ce")} DESC, c.cid) AS rn
-      FROM embeddings e, c),
-    cells AS (SELECT vec_id, cid AS cell FROM ranked WHERE rn = 1),
-    probes AS (SELECT vec_id AS qid, cid AS cell, rn FROM ranked
-               WHERE vec_id < {N_QUERY_VECS} AND rn <= {V9_MAX_PROBE}),
+    WITH {_tivf_cells_probes_sql(SEED, N_QUERY_VECS, V9_MAX_PROBE)},
     hit AS (
       SELECT x.qid, x.vec_id, MIN(p.rn) AS min_rn
       FROM ({QUERIES["v1_cosine_topk"].oracle}) x
@@ -975,7 +1143,7 @@ def v9(spark, sf_dir):
     # stack+ORDER BY) over session-cached index tables on the measured
     # 0.09 s/action local-mode floor — i.e. the whole gap is scheduler,
     # not plan; the joined data is k x |queries| rows.
-    _, cells, probes = _ivf_cells_probes(spark, sf_dir, V9_MAX_PROBE)
+    _, cells, probes = _tivf_cells_probes(spark, sf_dir, SEED, V9_MAX_PROBE)
     exact = _exact_topk(spark, sf_dir).select("qid", "vec_id")
     # broadcast the |eval queries| x k ground truth against the corpus-
     # sized cells table (r15): bounded by construction, but the estimate
@@ -1492,12 +1660,28 @@ def _exact_topk_v12(spark, sf_dir):
     )
 
 
-def _recall_agg(exact, got):
-    """(qid, n_topk, n_recovered, recall): per-query recall of a
-    (qid, vec_id) result set against the exact ground truth — the shared
-    back half of the single-encoding ANN calibration evals (v12, v14;
-    v17/v23 run the stacked (encoding, qid) twin inside
-    _encoding_recall_plan since r16).
+# exact ground truth over the v12 eval query set as a WITH fragment
+# (CTE ``exact``) — the oracle twin of _exact_topk_v12
+_EXACT_V12_CTES = f"""qv AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
+                WHERE vec_id < {V12_NQ}),
+    corpus AS (SELECT vec_id, embedding FROM embeddings),
+    scored AS (
+      SELECT qv.qid, c.vec_id,
+             {_COS_SQL.format(a="qv.qe", b="c.embedding")} AS sim
+      FROM qv, corpus c WHERE qv.qid <> c.vec_id),
+    exact AS (
+      SELECT qid, vec_id FROM scored
+      QUALIFY ROW_NUMBER() OVER (PARTITION BY qid
+          ORDER BY sim DESC, vec_id) <= {TOP_K})"""
+
+
+def _recall_agg(exact, got, key: str | None = None, values: tuple = ()):
+    """(qid[, key], n_topk, n_recovered, recall): per-query recall of a
+    (qid[, key], vec_id) result set against the exact ground truth — the
+    shared back half of the ANN calibration evals (v12, v14, v17, v20,
+    v23, v24).  With ``key``, ``got`` stacks one result set per value in
+    ``values`` (tagged in column ``key``) and the exact side is exploded
+    per value, so ONE aggregate over (qid, key) yields every stacked row.
 
     The result side is BROADCAST explicitly (r15): ``got`` is a top-k
     result set, bounded at |eval queries| x k rows by construction, but
@@ -1509,21 +1693,43 @@ def _recall_agg(exact, got):
     and removes both (plan: SortMergeJoin LeftOuter -> BroadcastHashJoin
     in every recall eval; the same reasoning as the broadcast ground
     truth in the v9 probe stack)."""
-    g = got.select("qid", "vec_id", F.lit(1).alias("hit"))
+    keys = ["qid"] + ([key] if key else [])
+    if key:
+        exact = exact.withColumn(key, F.explode(F.array(*[F.lit(v) for v in values])))
+    g = got.select(*keys, "vec_id", F.lit(1).alias("hit"))
     return (
-        exact.join(F.broadcast(g), ["qid", "vec_id"], "left")
-        .groupBy("qid")
+        exact.join(F.broadcast(g), keys + ["vec_id"], "left")
+        .groupBy(*keys)
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_topk"),
             F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias("n_recovered"),
         )
         .select(
-            "qid",
+            *keys,
             "n_topk",
             "n_recovered",
             F.round(F.col("n_recovered") / F.col("n_topk"), 4).alias("recall"),
         )
     )
+
+
+def _recall_stack_sql(key: str | None = None, values: tuple = ()) -> str:
+    """The oracle twin of _recall_agg, written independently: the final
+    SELECT of a recall eval over CTE ``exact`` (qid, vec_id) and CTE
+    ``got`` (qid[, key], vec_id), one row per (qid[, key])."""
+    k = f", k.{key}" if key else ""
+    keys = " UNION ALL ".join(f"SELECT {v!r} AS {key}" for v in values)
+    cross = f"CROSS JOIN ({keys}) k" if key else ""
+    on = f"g.{key} = k.{key} AND " if key else ""
+    hit = "CASE WHEN g.vec_id IS NOT NULL THEN 1 ELSE 0 END"
+    return f"""
+    SELECT e.qid{k}, CAST(COUNT(*) AS BIGINT) AS n_topk,
+           CAST(SUM({hit}) AS BIGINT) AS n_recovered,
+           ROUND(SUM({hit}) * 1.0 / COUNT(*), 4) AS recall
+    FROM exact e {cross}
+    LEFT JOIN got g ON {on}g.qid = e.qid AND g.vec_id = e.vec_id
+    GROUP BY e.qid{k} ORDER BY e.qid{k}
+    """
 
 
 @_register(
@@ -1538,26 +1744,9 @@ def _recall_agg(exact, got):
     "side re-executes its real ADC + re-rank plan against the cached "
     "codes, so the measured cost is the serving path itself.",
     f"""
-    WITH qv AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
-                WHERE vec_id < {V12_NQ}),
-    corpus AS (SELECT vec_id, embedding FROM embeddings),
-    scored AS (
-      SELECT qv.qid, c.vec_id,
-             {_COS_SQL.format(a="qv.qe", b="c.embedding")} AS sim
-      FROM qv, corpus c WHERE qv.qid <> c.vec_id),
-    exact AS (
-      SELECT qid, vec_id FROM scored
-      QUALIFY ROW_NUMBER() OVER (PARTITION BY qid
-          ORDER BY sim DESC, vec_id) <= {TOP_K}),
-    pq AS (SELECT qid, vec_id FROM ({_pq_topk_sql(PQ_ITERS, V12_NQ)}))
-    SELECT e.qid, CAST(COUNT(*) AS BIGINT) AS n_topk,
-           CAST(SUM(CASE WHEN p.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_recovered,
-           ROUND(SUM(CASE WHEN p.vec_id IS NOT NULL THEN 1 ELSE 0 END) * 1.0
-                 / COUNT(*), 4) AS recall
-    FROM exact e LEFT JOIN pq p ON p.qid = e.qid AND p.vec_id = e.vec_id
-    GROUP BY e.qid ORDER BY e.qid
-    """,
+    WITH {_EXACT_V12_CTES},
+    got AS (SELECT qid, vec_id FROM ({_pq_topk_sql(PQ_ITERS, V12_NQ)}))
+    {_recall_stack_sql()}""",
     ("similarity", "ann", "pq", "eval", "calibration", "pipeline"),
 )
 def v12(spark, sf_dir):
@@ -1606,9 +1795,9 @@ def _residual_subs_plan(e, cells, cents):
     ).select("vec_id", "cell", F.col("s.m").alias("m"), F.col("s.sube").alias("sube"))
 
 
-def _rpq_index(spark, sf_dir, iters: int = PQ_ITERS, trained: bool = False):
-    """(e, cw, codes, cents, cents6): the residual-encoded IVFADC index,
-    session-cached.
+def _rpq_index(spark, sf_dir, quantizer: Quantizer):
+    """(e, cw, codes, cents, cents6): the residual-encoded IVFADC index
+    over ``quantizer``'s cells, session-cached.
 
     cw = (m, cid, cwe, cw_ss): PQ_M×16 codewords k-means-TRAINED on the
     RESIDUAL sub-blocks (same seed init + Lloyd machinery as v11's raw
@@ -1621,33 +1810,29 @@ def _rpq_index(spark, sf_dir, iters: int = PQ_ITERS, trained: bool = False):
     the precomputed per-code term of the FAISS IVFADC formulation).
     cents6 = (cell, cent_ss6).  Memory path unchanged: the hot index is
     still M small ints + one BIGINT per vector plus a broadcast codebook
-    and the 8-row cell stats.
-
-    ``trained=True`` builds the residual index against the TRAINED
-    coarse cells (v19's quantizer) instead of the seed cells — the
-    residuals, codebook, crosstab and cell stats all follow the centroid
-    table, so v23 can re-adjudicate the encoding question on the tighter
-    cells the serving default actually uses."""
+    and the 8-row cell stats.  The residuals, codebook, crosstab and
+    cell stats all follow the quantizer's centroid table, so v23 re-runs
+    v17's encoding question on the trained cells.  Residual codes exist
+    for the 8-cell SEED and TRAINED quantizers only: serving uses raw
+    codes (v17/v23's measured adjudication)."""
+    kp = {SEED: "rpq_", TRAINED: "trpq_"}.get(quantizer)
+    if kp is None:
+        raise ValueError(
+            "residual codes exist only for the 8-cell IVF_SEED_IDS quantizers "
+            f"(SEED, TRAINED), got {quantizer}"
+        )
     e = _emb(spark, sf_dir).select("vec_id", "embedding")
-    if trained:
-        _, cells, _ = _tivf_cells_probes(spark, sf_dir, N_PROBE)
-        cents = _tivf_centroids(spark, sf_dir).select(
-            F.col("cid").alias("cell"), F.col("cwe").alias("ce")
-        )
-    else:
-        _, cells, _ = _ivf_cells_probes(spark, sf_dir, N_PROBE)
-        cents = e.where(F.col("vec_id").isin(*IVF_SEED_IDS)).select(
-            F.col("vec_id").alias("cell"), F.col("embedding").alias("ce")
-        )
-    kp = "trpq_" if trained else "rpq_"
-    sfx = "" if iters == PQ_ITERS else f"_i{iters}"
+    _, cells, _ = _tivf_cells_probes(spark, sf_dir, quantizer, N_PROBE)
+    cents = _tivf_centroids(spark, sf_dir, quantizer).select(
+        F.col("cid").alias("cell"), F.col("cwe").alias("ce")
+    )
 
     cw = _session_cached(
         spark,
         sf_dir,
-        f"{kp}codewords{sfx}",
+        f"{kp}codewords",
         lambda: _codebook_plan(
-            _residual_subs_plan(e, cells, cents).select("vec_id", "m", "sube"), iters
+            _residual_subs_plan(e, cells, cents).select("vec_id", "m", "sube"), PQ_ITERS
         ).localCheckpoint(eager=False),
     )
 
@@ -1684,7 +1869,7 @@ def _rpq_index(spark, sf_dir, iters: int = PQ_ITERS, trained: bool = False):
             .localCheckpoint(eager=False)
         )
 
-    codes = _session_cached(spark, sf_dir, f"{kp}codes{sfx}", build_codes)
+    codes = _session_cached(spark, sf_dir, f"{kp}codes", build_codes)
     cents6 = cents.select(
         "cell",
         F.round(dot_double(F.col("ce"), F.col("ce")) * 1e6).cast("bigint").alias("cent_ss6"),
@@ -1721,23 +1906,16 @@ def _rpq_query_side(e, cw, cents, nq: int):
     return q, qparts, qcent
 
 
-def _ivfpq_topk_sql(iters: int, nq: int) -> str:
-    """Raw-codes IVFADC oracle SQL for query vectors vec_id < ``nq`` —
-    v13's oracle at N_QUERY_VECS; v14's recall eval embeds it at V12_NQ.
-    Raw (not residual) by MEASURED adjudication — see v13's docstring
-    and _rivfpq_topk_sql for the residual twin."""
+def _tivfpq_topk_sql(quantizer: Quantizer, nq: int, nprobe: int = N_PROBE) -> str:
+    """Raw-codes IVFADC oracle SQL for query vectors vec_id < ``nq``:
+    _pq_adc_ctes' codebook/codes/query side + the quantizer's
+    cells/probes + the shared cand/adc/tail — v13 (SEED), v21 (TRAINED)
+    and v26 (SERVING at V25_NPROBE); the recall evals embed it at
+    V12_NQ.  Raw (not residual) by MEASURED adjudication — see v13's
+    description and _rivfpq_topk_sql for the residual twin."""
     return f"""
-    WITH {_pq_adc_ctes(iters, nq)},
-    c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings
-          WHERE vec_id IN {IVF_SEED_IDS}),
-    ivfranked AS (
-      SELECT e.vec_id, c.cid,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_COS_SQL.format(a="e.embedding", b="c.ce")} DESC, c.cid) AS rn
-      FROM embeddings e, c),
-    cells AS (SELECT vec_id, cid AS cell FROM ivfranked WHERE rn = 1),
-    probes AS (SELECT vec_id AS qid, cid AS cell FROM ivfranked
-               WHERE vec_id < {nq} AND rn <= {N_PROBE}),
+    WITH {_pq_adc_ctes(PQ_ITERS, nq)},
+    {_tivf_cells_probes_sql(quantizer, nq, nprobe)},
     cand AS (
       SELECT p.qid, x.vec_id
       FROM probes p JOIN cells x ON x.cell = p.cell AND x.vec_id <> p.qid),
@@ -1753,32 +1931,17 @@ def _ivfpq_topk_sql(iters: int, nq: int) -> str:
     """
 
 
-def _rivfpq_topk_sql(iters: int, nq: int, trained: bool = False) -> str:
-    """Residual-IVFADC oracle SQL for query vectors vec_id < ``nq`` —
-    v16's oracle at N_QUERY_VECS; v17's encoding eval embeds it at V12_NQ;
-    v23 embeds the trained=True form (the same residual machinery with
-    the ``c`` centroid CTE swapped for the trained table, so residuals,
-    codebook, crosstab and cell stats all follow the trained cells).
-    Mirrors _rpq_index/_rpq_query_side CTE for CTE: residuals, residual
-    codebook (Lloyd over rsub), crosstab rc6, cell stats, query table +
-    per-cell qcent, then the shared ADC tail."""
-    if trained:
-        cents_cte = f"""{_tivf_centroid_sql(TIVF_ITERS)},
-    c AS (SELECT cid, cwe AS ce FROM tcw)"""
-    else:
-        cents_cte = f"""c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings
-          WHERE vec_id IN {IVF_SEED_IDS})"""
+def _rivfpq_topk_sql(quantizer: Quantizer, nq: int) -> str:
+    """Residual-IVFADC oracle SQL for query vectors vec_id < ``nq`` over
+    ``quantizer``'s cells — v16's oracle (SEED); v17/v23's encoding
+    evals embed it at V12_NQ.  Mirrors _rpq_index/_rpq_query_side CTE
+    for CTE: residuals, residual codebook (Lloyd over rsub), crosstab
+    rc6, cell stats, query table + per-cell qcent, then the shared ADC
+    tail."""
     return f"""
     WITH mseq AS (SELECT UNNEST(generate_series(0, {PQ_M - 1})) AS m),
-    {cents_cte},
-    ivfranked AS (
-      SELECT e.vec_id, c.cid,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_COS_SQL.format(a="e.embedding", b="c.ce")} DESC, c.cid) AS rn
-      FROM embeddings e, c),
-    cells AS (SELECT vec_id, cid AS cell FROM ivfranked WHERE rn = 1),
-    probes AS (SELECT vec_id AS qid, cid AS cell FROM ivfranked
-               WHERE vec_id < {nq} AND rn <= {N_PROBE}),
+    {_tivf_cells_probes_sql(quantizer, nq, N_PROBE)},
+    c AS (SELECT cid, cwe AS ce FROM tcw),
     resid AS (
       SELECT e.vec_id, cl.cell,
              list_transform(generate_series(1, {EMB_DIM}),
@@ -1790,7 +1953,7 @@ def _rivfpq_topk_sql(iters: int, nq: int, trained: bool = False) -> str:
       SELECT r.vec_id, r.cell, mseq.m,
              r.rese[mseq.m * {PQ_SUB} + 1 : mseq.m * {PQ_SUB} + {PQ_SUB}] AS sube
       FROM resid r, mseq),
-    {_pq_codebook_sql(iters, src="rsub")},
+    {_pq_codebook_sql(PQ_ITERS, src="rsub")},
     centsub AS (
       SELECT c.cid AS cell, mseq.m,
              CAST(c.ce[mseq.m * {PQ_SUB} + 1 : mseq.m * {PQ_SUB} + {PQ_SUB}]
@@ -1856,52 +2019,30 @@ def _rivfpq_topk_sql(iters: int, nq: int, trained: bool = False) -> str:
 def _ivfpq_topk_plan(
     spark,
     sf_dir,
+    quantizer: Quantizer,
     nq: int = N_QUERY_VECS,
     residual: bool = False,
-    trained: bool = False,
     nprobe: int = N_PROBE,
-    seeds: tuple = IVF_SEED_IDS,
 ):
-    """The IVFADC plan for query vectors vec_id < ``nq`` — v13/v14 run it
-    with raw codes (the corpus's MEASURED winner — see v13's docstring);
-    v16/v17 with residual=True (Jégou §V's residual encoding); v21 with
-    trained=True (the spherical-k-means coarse quantizer, v19's cells —
-    the composition the v18→v20 measurements point at); v23 with BOTH
-    (residual codes rebuilt against the trained cells — the
-    re-adjudication of the encoding question on the cells the serving
-    default actually uses, since v17's verdict was conditional on seed-
-    cell tightness).  All variants share the ADC tail and the candidate
-    shape; only the cell tables and/or code tables differ."""
-    e, q, adc = _ivfpq_adc(
-        spark, sf_dir, nq, residual=residual, trained=trained, nprobe=nprobe, seeds=seeds
-    )
+    """The IVFADC plan over ``quantizer``'s cells for query vectors
+    vec_id < ``nq`` — v13/v14 (SEED), v21 (TRAINED) and v26 (SERVING)
+    run it with raw codes (the corpus's MEASURED winner — see v13's
+    description); v16 (SEED) and v23's residual side (TRAINED) with
+    residual=True (Jégou §V's residual encoding).  All variants share
+    the ADC tail and the candidate shape; only the cell tables and/or
+    code tables differ."""
+    e, q, adc = _ivfpq_adc(spark, sf_dir, quantizer, nq, residual, nprobe)
     return _pq_rank_tail(e, q, adc)
 
 
 def _ivfpq_adc(
-    spark,
-    sf_dir,
-    nq: int,
-    residual: bool,
-    trained: bool,
-    nprobe: int = N_PROBE,
-    seeds: tuple = IVF_SEED_IDS,
+    spark, sf_dir, quantizer: Quantizer, nq: int, residual: bool, nprobe: int = N_PROBE
 ):
     """The IVFADC front half — coarse pruning + ADC scoring — returning
     (e, q, adc) BEFORE the shortlist/re-rank tail, so a caller can either
     finish one plan (_ivfpq_topk_plan -> _pq_rank_tail) or stack several
     encodings' adc streams under ONE tail (_encoding_recall_plan, r16)."""
-    if trained:
-        _, cells, probes = _tivf_cells_probes(spark, sf_dir, nprobe, nq, seeds=seeds)
-    else:
-        assert seeds == IVF_SEED_IDS, "seed-quantizer plans take no seed pool"
-        _, cells, probes = _ivf_cells_probes(spark, sf_dir, nprobe, nq)
-    if residual:
-        # residual codes are trained against the DEFAULT 8-cell layouts
-        # only — the serving layout serves raw codes (v13/v17/v23's
-        # measured adjudication), so a non-default pool never composes
-        # with residual encoding
-        assert seeds == IVF_SEED_IDS, "residual codes exist for the default cells only"
+    _, cells, probes = _tivf_cells_probes(spark, sf_dir, quantizer, nprobe, nq)
     # (qid, vec_id) survivors of the coarse pruning — |queries| ×
     # (nprobe/ncells × corpus) rows, the candidate list a serving batch
     # materializes anyway; broadcast-small per batch
@@ -1923,7 +2064,7 @@ def _ivfpq_adc(
             )
         )
         return e, q, adc
-    e, cw, codes, cents, cents6 = _rpq_index(spark, sf_dir, trained=trained)
+    e, cw, codes, cents, cents6 = _rpq_index(spark, sf_dir, quantizer)
     q, qparts, qcent = _rpq_query_side(e, cw, cents, nq)
     adc = (
         codes.join(F.broadcast(cand), "vec_id")
@@ -1970,11 +2111,11 @@ def _ivfpq_adc(
     "cost) — v13 stays on seed cells through r10 so its driver-row "
     "history remains comparable; the serving default flips to the "
     "trained layout once v19–v21 are driver-attested.",
-    _ivfpq_topk_sql(PQ_ITERS, N_QUERY_VECS),
+    _tivfpq_topk_sql(SEED, N_QUERY_VECS),
     ("similarity", "ann", "ivf", "pq", "pipeline"),
 )
 def v13(spark, sf_dir):
-    return _ivfpq_topk_plan(spark, sf_dir, N_QUERY_VECS)
+    return _ivfpq_topk_plan(spark, sf_dir, SEED)
 
 
 # ---------------------------------------------------------------------------
@@ -1993,31 +2134,14 @@ def v13(spark, sf_dir):
     "deployment.  v17 extends this eval across encodings (raw vs "
     "residual), v18 across nprobe.",
     f"""
-    WITH qv AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
-                WHERE vec_id < {V12_NQ}),
-    corpus AS (SELECT vec_id, embedding FROM embeddings),
-    scored AS (
-      SELECT qv.qid, c.vec_id,
-             {_COS_SQL.format(a="qv.qe", b="c.embedding")} AS sim
-      FROM qv, corpus c WHERE qv.qid <> c.vec_id),
-    exact AS (
-      SELECT qid, vec_id FROM scored
-      QUALIFY ROW_NUMBER() OVER (PARTITION BY qid
-          ORDER BY sim DESC, vec_id) <= {TOP_K}),
-    ivfpq AS (SELECT qid, vec_id FROM ({_ivfpq_topk_sql(PQ_ITERS, V12_NQ)}))
-    SELECT e.qid, CAST(COUNT(*) AS BIGINT) AS n_topk,
-           CAST(SUM(CASE WHEN p.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_recovered,
-           ROUND(SUM(CASE WHEN p.vec_id IS NOT NULL THEN 1 ELSE 0 END) * 1.0
-                 / COUNT(*), 4) AS recall
-    FROM exact e LEFT JOIN ivfpq p ON p.qid = e.qid AND p.vec_id = e.vec_id
-    GROUP BY e.qid ORDER BY e.qid
-    """,
+    WITH {_EXACT_V12_CTES},
+    got AS (SELECT qid, vec_id FROM ({_tivfpq_topk_sql(SEED, V12_NQ)}))
+    {_recall_stack_sql()}""",
     ("similarity", "ann", "ivf", "pq", "eval", "calibration", "pipeline"),
 )
 def v14(spark, sf_dir):
     exact = _exact_topk_v12(spark, sf_dir).select("qid", "vec_id")
-    return _recall_agg(exact, _ivfpq_topk_plan(spark, sf_dir, V12_NQ)).orderBy("qid")
+    return _recall_agg(exact, _ivfpq_topk_plan(spark, sf_dir, SEED, V12_NQ)).orderBy("qid")
 
 
 # ---------------------------------------------------------------------------
@@ -2042,28 +2166,26 @@ def v14(spark, sf_dir):
     "On THIS corpus the raw encoding (v13) measures better — cells are "
     "not tight (mean cos ≈ 0.19) — which is exactly why both encodings "
     "are first-class and v17 is the eval that picks.",
-    _rivfpq_topk_sql(PQ_ITERS, N_QUERY_VECS),
+    _rivfpq_topk_sql(SEED, N_QUERY_VECS),
     ("similarity", "ann", "ivf", "pq", "residual", "pipeline"),
 )
 def v16(spark, sf_dir):
-    return _ivfpq_topk_plan(spark, sf_dir, N_QUERY_VECS, residual=True)
+    return _ivfpq_topk_plan(spark, sf_dir, SEED, residual=True)
 
 
 # ---------------------------------------------------------------------------
 # v17: encoding eval — raw vs residual composed recall, side by side
 # ---------------------------------------------------------------------------
-# exact-ground-truth CTE fragment shared by the wide-eval oracles
-_EXACT_V12_CTES = f"""qv AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
-                WHERE vec_id < {V12_NQ}),
-    corpus AS (SELECT vec_id, embedding FROM embeddings),
-    scored AS (
-      SELECT qv.qid, c.vec_id,
-             {_COS_SQL.format(a="qv.qe", b="c.embedding")} AS sim
-      FROM qv, corpus c WHERE qv.qid <> c.vec_id),
-    exact AS (
-      SELECT qid, vec_id FROM scored
-      QUALIFY ROW_NUMBER() OVER (PARTITION BY qid
-          ORDER BY sim DESC, vec_id) <= {TOP_K})"""
+def _encoding_recall_sql(quantizer: Quantizer) -> str:
+    """The oracle of _encoding_recall_plan: both encodings' top-k over
+    ``quantizer``'s cells, stacked under one recall aggregate."""
+    return f"""
+    WITH {_EXACT_V12_CTES},
+    got AS (
+      SELECT 'raw' AS encoding, qid, vec_id FROM ({_tivfpq_topk_sql(quantizer, V12_NQ)})
+      UNION ALL
+      SELECT 'residual', qid, vec_id FROM ({_rivfpq_topk_sql(quantizer, V12_NQ)}))
+    {_recall_stack_sql("encoding", ("raw", "residual"))}"""
 
 
 @_register(
@@ -2080,25 +2202,7 @@ _EXACT_V12_CTES = f"""qv AS (SELECT vec_id AS qid, embedding AS qe FROM embeddin
     "the same two rows flip, and THAT is when an operator switches v13 "
     "serving to v16.  One ground-truth artifact, both encodings' real "
     "plans, one stacked output.",
-    f"""
-    WITH {_EXACT_V12_CTES},
-    rawq AS (SELECT qid, vec_id FROM ({_ivfpq_topk_sql(PQ_ITERS, V12_NQ)})),
-    resq AS (SELECT qid, vec_id FROM ({_rivfpq_topk_sql(PQ_ITERS, V12_NQ)})),
-    got AS (
-      SELECT 'raw' AS encoding, qid, vec_id FROM rawq
-      UNION ALL
-      SELECT 'residual' AS encoding, qid, vec_id FROM resq)
-    SELECT e.qid, enc.encoding, CAST(COUNT(*) AS BIGINT) AS n_topk,
-           CAST(SUM(CASE WHEN g.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_recovered,
-           ROUND(SUM(CASE WHEN g.vec_id IS NOT NULL THEN 1 ELSE 0 END) * 1.0
-                 / COUNT(*), 4) AS recall
-    FROM exact e
-    CROSS JOIN (SELECT 'raw' AS encoding UNION ALL SELECT 'residual') enc
-    LEFT JOIN got g ON g.encoding = enc.encoding AND g.qid = e.qid
-                   AND g.vec_id = e.vec_id
-    GROUP BY e.qid, enc.encoding ORDER BY e.qid, enc.encoding
-    """,
+    _encoding_recall_sql(SEED),
     ("similarity", "ann", "ivf", "pq", "eval", "calibration", "pipeline"),
 )
 def v17(spark, sf_dir):
@@ -2109,10 +2213,10 @@ def v17(spark, sf_dir):
     # (~4.4 s: it retrains both codebooks per run, which the session
     # index amortizes here), so the suite's slowest Spark query is also
     # one of its best ratios (0.55x).
-    return _encoding_recall_plan(spark, sf_dir, trained=False)
+    return _encoding_recall_plan(spark, sf_dir, SEED)
 
 
-def _encoding_recall_plan(spark, sf_dir, trained: bool):
+def _encoding_recall_plan(spark, sf_dir, quantizer: Quantizer):
     """raw-vs-residual composed recall over one quantizer's cells —
     v17's eval body, quantizer-parametrized so v23 re-runs the identical
     adjudication over the trained cells.
@@ -2140,7 +2244,7 @@ def _encoding_recall_plan(spark, sf_dir, trained: bool):
     appx = None
     e_ref = None
     for enc, res in (("raw", False), ("residual", True)):
-        e, _q, adc = _ivfpq_adc(spark, sf_dir, V12_NQ, residual=res, trained=trained)
+        e, _q, adc = _ivfpq_adc(spark, sf_dir, quantizer, V12_NQ, res)
         e_ref = e
         s = adc.where(F.col("vec_id") != F.col("qid")).select(
             F.lit(enc).alias("encoding"),
@@ -2150,29 +2254,7 @@ def _encoding_recall_plan(spark, sf_dir, trained: bool):
         )
         appx = s if appx is None else appx.unionByName(s)
     got = _stacked_topk(e_ref, V12_NQ, appx)
-    # recall agg over the stacked key: the exact side exploded per
-    # encoding, the (bounded) stacked result broadcast — _recall_agg's
-    # shape with (encoding, qid) in place of qid
-    ex2 = exact.withColumn(
-        "encoding", F.explode(F.array(F.lit("raw"), F.lit("residual")))
-    )
-    g = got.select("encoding", "qid", "vec_id", F.lit(1).alias("hit"))
-    out = (
-        ex2.join(F.broadcast(g), ["encoding", "qid", "vec_id"], "left")
-        .groupBy("qid", "encoding")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_topk"),
-            F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias("n_recovered"),
-        )
-        .select(
-            "qid",
-            "encoding",
-            "n_topk",
-            "n_recovered",
-            F.round(F.col("n_recovered") / F.col("n_topk"), 4).alias("recall"),
-        )
-    )
-    return out.orderBy("qid", "encoding")
+    return _recall_agg(exact, got, "encoding", ("raw", "residual")).orderBy("qid", "encoding")
 
 
 def _stacked_topk(e, nq: int, appx):
@@ -2214,34 +2296,15 @@ def _stacked_topk(e, nq: int, appx):
 PROBE_SWEEP = (1, 2, 4, N_CELLS)
 
 
-def _nprobe_sweep_sql(trained: bool) -> str:
-    """The fused nprobe-sweep oracle, quantizer-parametrized: v18 runs it
-    over the seed cells, v22 over the trained ones — everything from the
-    probe ranking down (window passes, shortlist reconstruction, recall
-    stack) is identical, only the centroid source differs."""
-    if trained:
-        head = f"""{_tivf_centroid_sql(TIVF_ITERS)},
-    ivfranked AS (
-      SELECT e.vec_id, t.cid,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_COS_SQL.format(a="e.embedding", b="t.cwe")} DESC, t.cid) AS rn
-      FROM embeddings e, tcw t)"""
-    else:
-        head = f"""c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings
-          WHERE vec_id IN {IVF_SEED_IDS}),
-    ivfranked AS (
-      SELECT e.vec_id, c.cid,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_COS_SQL.format(a="e.embedding", b="c.ce")} DESC, c.cid) AS rn
-      FROM embeddings e, c)"""
+def _nprobe_sweep_sql(quantizer: Quantizer) -> str:
+    """The fused nprobe-sweep oracle over ``quantizer``'s cells (v18
+    SEED, v22 TRAINED): the full probe ranking, window passes, shortlist
+    reconstruction and recall stack."""
     return f"""
     WITH {_pq_adc_ctes(PQ_ITERS, V12_NQ)},
-    {head},
-    cells AS (SELECT vec_id, cid AS cell FROM ivfranked WHERE rn = 1),
-    proben AS (SELECT vec_id AS qid, cid AS cell, rn FROM ivfranked
-               WHERE vec_id < {V12_NQ}),
+    {_tivf_cells_probes_sql(quantizer, V12_NQ, N_CELLS)},
     mp AS (SELECT p.qid, x.vec_id, p.rn AS mp
-           FROM proben p JOIN cells x ON x.cell = p.cell),
+           FROM probes p JOIN cells x ON x.cell = p.cell),
     adcall AS (
       SELECT qp.qid, cd.vec_id,
              CAST(SUM(qp.qdot6) AS DOUBLE) / 1e6 AS adc,
@@ -2322,23 +2385,22 @@ def _nprobe_sweep_sql(trained: bool) -> str:
     "filter loss — measured, not asserted.  At 100 TB the sweep is the "
     "capacity-planning query: recall-per-probe directly prices "
     "nprobe/ncells × index-bytes per query.",
-    _nprobe_sweep_sql(trained=False),
+    _nprobe_sweep_sql(SEED),
     ("similarity", "ann", "ivf", "pq", "eval", "calibration", "pipeline"),
 )
 def v18(spark, sf_dir):
-    return _nprobe_sweep_plan(spark, sf_dir, trained=False)
+    return _nprobe_sweep_plan(spark, sf_dir, SEED)
 
 
-def _nprobe_sweep_plan(spark, sf_dir, trained: bool):
-    """The fused sweep plan, quantizer-parametrized (v18 seed / v22
-    trained) — the PQ codes, windows, and recall stack are shared; only
+def _nprobe_sweep_plan(spark, sf_dir, quantizer: Quantizer):
+    """The fused sweep plan over ``quantizer``'s cells (v18 SEED, v22
+    TRAINED) — the PQ codes, windows, and recall stack are shared; only
     the cells/probes source differs."""
     from functools import reduce
     from operator import or_
 
     e, cw, codes = _pq_index(spark, sf_dir)
-    cp = _tivf_cells_probes if trained else _ivf_cells_probes
-    _, cells, probes = cp(spark, sf_dir, N_CELLS, V12_NQ)
+    _, cells, probes = _tivf_cells_probes(spark, sf_dir, quantizer, N_CELLS, V12_NQ)
     q, qparts = _pq_query_side(e, cw, V12_NQ)
     mp = cells.join(F.broadcast(probes), "cell").select(
         "qid", "vec_id", F.col("rn").alias("mp")
@@ -2441,237 +2503,53 @@ def _nprobe_sweep_plan(spark, sf_dir, trained: bool):
 # is pure coarse-filter loss; better cells are the only lever at fixed
 # nprobe, and residual codes provably were not — see v17)
 # ---------------------------------------------------------------------------
-TIVF_ITERS = 2  # spherical-Lloyd steps over the same deterministic sample
-# as the PQ codebook (vec_id % PQ_TRAIN_MOD == PQ_TRAIN_REM) — at 100 TB
-# both become hash-mod samples to a fixed budget; only determinism matters
-# for the oracle
-
-# v24's ncells axis: deterministic seed pool whose first k ids seed a
-# k-cell trained quantizer — the first 8 ARE IVF_SEED_IDS, so the
-# ncells=8 point IS the serving quantizer and pins to v20's trained row.
-# All ids exist at every SF (vec_id < 500).
-# Octaves 3 and 4 (the r12 ncells=32 extension) interleave two further
-# +20/+40 offsets of the second octave — same spacing family, all ids
-# < 500 (present at every SF) and pairwise distinct (asserted).
-TIVF_SEED_POOL = (
-    IVF_SEED_IDS
-    + (17, 79, 131, 191, 241, 307, 359, 421)
-    + (37, 99, 151, 211, 261, 327, 379, 441)
-    + (57, 119, 171, 231, 281, 347, 399, 461)
-)
-# raise, not assert: this pool-integrity invariant must survive python -O
-# (r12 ADVICE — bare asserts vanish under optimized bytecode)
-if len(set(TIVF_SEED_POOL)) != 32 or max(TIVF_SEED_POOL) >= 500:
-    raise ValueError(
-        "TIVF_SEED_POOL must be 32 pairwise-distinct vec_ids < 500 "
-        f"(got {len(set(TIVF_SEED_POOL))} distinct, max {max(TIVF_SEED_POOL)})"
-    )
-NCELLS_SWEEP = (4, 8, 16, 32)
-
-
-def _spherical_lloyd_step(samp, cw):
-    """One spherical-k-means refinement for the COARSE quantizer: assign
-    every training vector to its argmax-cosine centroid (score =
-    dot/‖c‖ — the ‖x‖ factor is constant under the argmax; dot and norm
-    via the deterministic left-fold so both engines pick identical
-    cells, ties to the lower cid), then recompute each centroid as the
-    per-dimension mean of its members through the 1e6-scaled BIGINT sum
-    + ONE double division — _lloyd_step's integer-exact iteration
-    boundary at M=1 over full vectors.  Cosine assignment is scale-
-    invariant in the centroid, so the mean needs NO renormalization
-    (spherical k-means' normalize step only rescales c, which argmax
-    cos ignores) — the iteration boundary stays purely the rounded
-    mean.  Empty cells keep their previous centroid."""
-    scored = samp.crossJoin(F.broadcast(cw)).select(
-        "vec_id",
-        "cid",
-        "xe",
-        (dot_double(F.col("xe"), F.col("cwe")) / norm2(F.col("cwe"))).alias("score"),
-    )
-    wpick = Window.partitionBy("vec_id").orderBy(F.col("score").desc(), "cid")
-    assigned = (
-        scored.withColumn("rn", F.row_number().over(wpick))
-        .where(F.col("rn") == 1)
-        .select("cid", "xe")
-    )
-    mn = assigned.select("cid", F.posexplode("xe").alias("j", "v")).groupBy("cid", "j").agg(
-        F.sum(F.round(F.col("v") * 1e6).cast("bigint")).alias("s6"),
-        F.count(F.lit(1)).alias("cnt"),
-    )
-    nc = (
-        mn.select("cid", "j", (F.round(F.col("s6") / F.col("cnt")) / 1e6).alias("v"))
-        .groupBy("cid")
-        .agg(F.array_sort(F.collect_list(F.struct("j", "v"))).alias("a"))
-        .select("cid", F.expr("transform(a, x -> x.v)").alias("nxt"))
-    )
-    return (
-        cw.select("cid", F.col("cwe").alias("prev"))
-        .join(nc, "cid", "left")
-        .select("cid", F.coalesce("nxt", "prev").alias("cwe"))
-    )
-
-
-def _tivf_centroids_plan(spark, sf_dir, iters: int, seeds: tuple = IVF_SEED_IDS):
-    """Trained coarse centroids (cid, cwe DOUBLE[]): the ``seeds``
-    vectors (default IVF_SEED_IDS — the serving quantizer) refined by
-    ``iters`` spherical-Lloyd steps.  iters=0 is the seed quantizer
-    itself (kept callable so the strictly-improves test has its
-    baseline, exactly like the PQ codebook's)."""
-    xe = (
-        _emb(spark, sf_dir)
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("xe"))
-    )
-    cw = xe.where(F.col("vec_id").isin(*seeds)).select(
-        F.col("vec_id").alias("cid"), F.col("xe").alias("cwe")
-    )
-    if iters:
-        samp = xe.where(
-            F.col("vec_id") % PQ_TRAIN_MOD == PQ_TRAIN_REM
-        ).localCheckpoint(eager=False)
-        for _ in range(iters):
-            cw = _spherical_lloyd_step(samp, cw)
-    return cw
-
-
-def _tivf_centroids(spark, sf_dir, seeds: tuple = IVF_SEED_IDS):
-    """The trained centroid table (cid, cwe), session-cached — shared by
-    the batch index (_tivf_cells_probes) and the streaming serving tier
-    (which collects it as the broadcast-small closure constant).
-    Non-default ``seeds`` (the v24 ncells sweep) key their own cache
-    entries; the default keys are unchanged."""
-    sfx = "" if seeds == IVF_SEED_IDS else f"_c{len(seeds)}"
-    return _session_cached(
-        spark,
-        sf_dir,
-        f"tivf_cents{sfx}",
-        lambda: _tivf_centroids_plan(spark, sf_dir, TIVF_ITERS, seeds).localCheckpoint(
-            eager=False
-        ),
-    )
-
-
-def _tivf_cells_probes(
-    spark, sf_dir, max_probe: int, nq: int = N_QUERY_VECS, seeds: tuple = IVF_SEED_IDS
-):
-    """(e, cells, probes) for the TRAINED coarse quantizer — the
-    _ivf_cells_probes twin with tivf_* session keys; the cell pick and
-    probe ranking are the shared _cells_probes back half, so the two
-    quantizers can never drift in tie-break or ranking semantics."""
-    e = _emb(spark, sf_dir).select("vec_id", "embedding")
-    cw = _tivf_centroids(spark, sf_dir, seeds)
-    sfx = "" if seeds == IVF_SEED_IDS else f"_c{len(seeds)}"
-
-    def build_scored():
-        return (
-            e.crossJoin(F.broadcast(cw))
-            .select("vec_id", "cid", cosine(F.col("embedding"), F.col("cwe")).alias("sim"))
-            .localCheckpoint(eager=False)
+def _membership_recall_plan(spark, sf_dir, key: str, points: tuple):
+    """Cell-MEMBERSHIP recall@k (true neighbor inside the probed cells)
+    per (qid, key) over the V12_NQ eval set, one stacked output for
+    ``points`` = ((key value, quantizer, nprobe), ...) — v20 stacks the
+    quantizers, v24 the ncells axis."""
+    exact = _exact_topk_v12(spark, sf_dir).select("qid", "vec_id")
+    hits = None
+    for val, quantizer, nprobe in points:
+        _, cells, probes = _tivf_cells_probes(spark, sf_dir, quantizer, nprobe, V12_NQ)
+        # broadcast ground truth vs corpus-sized cells — the v9 rationale
+        h = (
+            F.broadcast(exact).join(cells, "vec_id")
+            .join(F.broadcast(probes.select("qid", "cell")), ["qid", "cell"])
+            .select("qid", F.lit(val).alias(key), "vec_id")
         )
-
-    scored = _session_cached(spark, sf_dir, f"tivf{sfx}_scored", build_scored)
-    cells, probes = _cells_probes(spark, sf_dir, scored, f"tivf{sfx}_", max_probe, nq)
-    return e, cells, probes
-
-
-def _tivf_centroid_sql(iters: int, seeds: tuple = IVF_SEED_IDS, tag: str = "") -> str:
-    """WITH fragment mirroring _tivf_centroids_plan: ``iters`` unrolled
-    spherical-Lloyd steps ending in ``{tag}tcw`` (cid, cwe).  Same
-    integer-exact 6-digit-mean iteration boundary as the PQ codebook
-    SQL, so both engines carry bitwise-identical centroids into every
-    assignment.  ``tag`` prefixes every CTE name so several trainings
-    (the v24 ncells sweep) compose in one query; the default tag=""
-    reproduces the v19–v23 fragment verbatim."""
-    parts = [
-        f"{tag}xt AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS xe FROM embeddings)",
-        f"""{tag}tcw_i0 AS (
-      SELECT vec_id AS cid, xe AS cwe FROM {tag}xt WHERE vec_id IN {seeds})""",
-    ]
-    prev = f"{tag}tcw_i0"
-    for i in range(1, iters + 1):
-        parts += [
-            f"""{tag}tasg_i{i} AS (
-      SELECT s.vec_id, c.cid, s.xe
-      FROM {tag}xt s, {prev} c
-      WHERE s.vec_id % {PQ_TRAIN_MOD} = {PQ_TRAIN_REM}
-      QUALIFY ROW_NUMBER() OVER (PARTITION BY s.vec_id
-          ORDER BY list_dot_product(s.xe, c.cwe)
-                   / SQRT(list_dot_product(c.cwe, c.cwe)) DESC, c.cid) = 1)""",
-            f"""{tag}tmn_i{i} AS (
-      SELECT cid, j,
-             CAST(SUM(CAST(ROUND(xe[j] * 1e6) AS BIGINT)) AS BIGINT) AS s6,
-             COUNT(*) AS cnt
-      FROM {tag}tasg_i{i}, UNNEST(generate_series(1, {EMB_DIM})) AS t(j)
-      GROUP BY cid, j)""",
-            f"""{tag}tnc_i{i} AS (
-      SELECT cid, LIST(ROUND(s6 / cnt) / 1e6 ORDER BY j) AS cwe
-      FROM {tag}tmn_i{i} GROUP BY cid)""",
-            f"""{tag}tcw_i{i} AS (
-      SELECT p.cid, COALESCE(n.cwe, p.cwe) AS cwe
-      FROM {prev} p LEFT JOIN {tag}tnc_i{i} n ON n.cid = p.cid)""",
-        ]
-        prev = f"{tag}tcw_i{i}"
-    parts.append(f"{tag}tcw AS (SELECT cid, cwe FROM {prev})")
-    return ",\n    ".join(parts)
+        hits = h if hits is None else hits.unionByName(h)
+    values = tuple(v for v, _, _ in points)
+    return _recall_agg(exact, hits, key, values).orderBy("qid", key)
 
 
-def _tivf_topk_plan(spark, sf_dir, nprobe: int = N_PROBE, seeds: tuple = IVF_SEED_IDS):
-    """Trained-IVF cell-probe top-k (v19's plan), parameterized by probe
-    count and seed pool so the SERVING layout (serving.SERVING_NCELLS
-    cells off TIVF_SEED_POOL, nprobe scaled to hold the scan fraction)
-    runs the identical plan shape as the declared 8-cell calibration
-    query — centroids broadcast, cells the partition key, a query reads
-    nprobe/ncells of the corpus."""
-    e, cells, probes = _tivf_cells_probes(spark, sf_dir, nprobe, seeds=seeds)
-    probes = probes.drop("rn")
-    qv = e.where(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    cand = (
-        F.broadcast(probes)
-        .join(cells, "cell")
-        .where(F.col("vec_id") != F.col("qid"))
-        .join(e, "vec_id")
-        .join(F.broadcast(qv), "qid")
-        .select("qid", "vec_id", cosine(F.col("qe"), F.col("embedding")).alias("sim"))
-    )
-    wrank = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("vec_id"))
-    return (
-        cand.select("qid", "vec_id", "sim", F.row_number().over(wrank).alias("rnk"))
-        .where(F.col("rnk") <= TOP_K)
-        .select("qid", "vec_id", "rnk", F.round("sim", 4).alias("sim"))
-        .orderBy("qid", "rnk")
-    )
-
-
-def _tivf_topk_sql(nprobe: int = N_PROBE, seeds: tuple = IVF_SEED_IDS) -> str:
-    """Trained-IVF cell-probe top-k oracle, layout-parameterized like
-    _tivf_topk_plan (v19 = defaults; v25 = the serving layout)."""
+def _membership_recall_sql(key: str, points: tuple) -> str:
+    """The oracle of _membership_recall_plan: one tagged cells/probes
+    fragment per point, the hits unioned under one recall stack."""
+    blocks, hits = [], []
+    for i, (val, quantizer, nprobe) in enumerate(points):
+        tag = f"m{i}_"
+        blocks.append(_tivf_cells_probes_sql(quantizer, V12_NQ, nprobe, tag))
+        hits.append(
+            f"""
+      SELECT {val!r} AS {key}, x.qid, x.vec_id
+      FROM exact x
+      JOIN {tag}cells cl ON cl.vec_id = x.vec_id
+      JOIN {tag}probes p ON p.qid = x.qid AND p.cell = cl.cell"""
+        )
+    blocks_sql = ",\n    ".join(blocks)
     return f"""
-    WITH {_tivf_centroid_sql(TIVF_ITERS, seeds)},
-    ranked AS (
-      SELECT e.vec_id, c.cid,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_COS_SQL.format(a="e.embedding", b="c.cwe")} DESC, c.cid) AS rn
-      FROM embeddings e, tcw c),
-    cells AS (SELECT vec_id, cid AS cell FROM ranked WHERE rn = 1),
-    probes AS (SELECT vec_id AS qid, cid AS cell FROM ranked
-               WHERE vec_id < {N_QUERY_VECS} AND rn <= {nprobe}),
-    qv AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
-           WHERE vec_id < {N_QUERY_VECS}),
-    cand AS (
-      SELECT p.qid, x.vec_id,
-             {_COS_SQL.format(a="qv.qe", b="e.embedding")} AS sim
-      FROM probes p
-      JOIN cells x ON x.cell = p.cell AND x.vec_id <> p.qid
-      JOIN embeddings e ON e.vec_id = x.vec_id
-      JOIN qv ON qv.qid = p.qid),
-    rr AS (
-      SELECT qid, vec_id, sim,
-             ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rnk
-      FROM cand)
-    SELECT qid, vec_id, rnk, ROUND(sim, 4) AS sim
-    FROM rr WHERE rnk <= {TOP_K} ORDER BY qid, rnk
-    """
+    WITH {_EXACT_V12_CTES},
+    {blocks_sql},
+    got AS ({" UNION ALL ".join(hits)})
+    {_recall_stack_sql(key, tuple(v for v, _, _ in points))}"""
+
+
+_V20_POINTS = (("seed", SEED, N_PROBE), ("trained", TRAINED, N_PROBE))
+# v24: a trained quantizer per ncells off the sweep pool, nprobe = ncells/4
+_V24_POINTS = tuple(
+    (n, Quantizer(TIVF_SEED_POOL[:n], TIVF_ITERS), max(1, n // 4)) for n in NCELLS_SWEEP
+)
 
 
 @_register(
@@ -2690,11 +2568,11 @@ def _tivf_topk_sql(nprobe: int = N_PROBE, seeds: tuple = IVF_SEED_IDS) -> str:
     "side-by-side eval, test-gated strictly-improves).  Serving shape "
     "identical to v5: centroids broadcast, cells are the partition "
     "key, a query touches nprobe/ncells of the corpus.",
-    _tivf_topk_sql(),
+    _tivf_topk_sql(TRAINED),
     ("similarity", "ann", "ivf", "trained", "pipeline"),
 )
 def v19(spark, sf_dir):
-    return _tivf_topk_plan(spark, sf_dir)
+    return _tivf_topk_plan(spark, sf_dir, TRAINED)
 
 
 @_register(
@@ -2711,116 +2589,16 @@ def v19(spark, sf_dir):
     "per query.  Same eval discipline as v17: one ground-truth "
     "artifact, both quantizers' real cell/probe tables, one stacked "
     "output, strictly-improves test-gated.",
-    f"""
-    WITH {_tivf_centroid_sql(TIVF_ITERS)},
-    c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings
-          WHERE vec_id IN {IVF_SEED_IDS}),
-    sranked AS (
-      SELECT e.vec_id, c.cid,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_COS_SQL.format(a="e.embedding", b="c.ce")} DESC, c.cid) AS rn
-      FROM embeddings e, c),
-    scells AS (SELECT vec_id, cid AS cell FROM sranked WHERE rn = 1),
-    sprobes AS (SELECT vec_id AS qid, cid AS cell FROM sranked
-                WHERE vec_id < {V12_NQ} AND rn <= {N_PROBE}),
-    tranked AS (
-      SELECT e.vec_id, t.cid,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_COS_SQL.format(a="e.embedding", b="t.cwe")} DESC, t.cid) AS rn
-      FROM embeddings e, tcw t),
-    tcells AS (SELECT vec_id, cid AS cell FROM tranked WHERE rn = 1),
-    tprobes AS (SELECT vec_id AS qid, cid AS cell FROM tranked
-                WHERE vec_id < {V12_NQ} AND rn <= {N_PROBE}),
-    {_EXACT_V12_CTES},
-    hits AS (
-      SELECT 'seed' AS quantizer, x.qid, x.vec_id
-      FROM exact x
-      JOIN scells cl ON cl.vec_id = x.vec_id
-      JOIN sprobes p ON p.qid = x.qid AND p.cell = cl.cell
-      UNION ALL
-      SELECT 'trained', x.qid, x.vec_id
-      FROM exact x
-      JOIN tcells cl ON cl.vec_id = x.vec_id
-      JOIN tprobes p ON p.qid = x.qid AND p.cell = cl.cell)
-    SELECT e.qid, q.quantizer, CAST(COUNT(*) AS BIGINT) AS n_topk,
-           CAST(SUM(CASE WHEN h.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_recovered,
-           ROUND(SUM(CASE WHEN h.vec_id IS NOT NULL THEN 1 ELSE 0 END) * 1.0
-                 / COUNT(*), 4) AS recall
-    FROM exact e
-    CROSS JOIN (SELECT 'seed' AS quantizer UNION ALL SELECT 'trained') q
-    LEFT JOIN hits h ON h.quantizer = q.quantizer AND h.qid = e.qid
-                    AND h.vec_id = e.vec_id
-    GROUP BY e.qid, q.quantizer ORDER BY e.qid, q.quantizer
-    """,
+    _membership_recall_sql("quantizer", _V20_POINTS),
     ("similarity", "ann", "ivf", "eval", "calibration", "trained", "pipeline"),
 )
 def v20(spark, sf_dir):
-    exact = _exact_topk_v12(spark, sf_dir).select("qid", "vec_id")
-    out = None
-    for qname, cpfn in (("seed", _ivf_cells_probes), ("trained", _tivf_cells_probes)):
-        _, cells, probes = cpfn(spark, sf_dir, N_PROBE, V12_NQ)
-        # broadcast ground truth vs corpus-sized cells — the v9 rationale
-        hit = (
-            F.broadcast(exact).join(cells, "vec_id")
-            .join(
-                F.broadcast(probes.select("qid", "cell", F.lit(1).alias("hit"))),
-                ["qid", "cell"],
-                "left",
-            )
-            .groupBy("qid")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_topk"),
-                F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias("n_recovered"),
-            )
-            .select(
-                "qid",
-                F.lit(qname).alias("quantizer"),
-                "n_topk",
-                "n_recovered",
-                F.round(F.col("n_recovered") / F.col("n_topk"), 4).alias("recall"),
-            )
-        )
-        out = hit if out is None else out.unionByName(hit)
-    return out.orderBy("qid", "quantizer")
+    return _membership_recall_plan(spark, sf_dir, "quantizer", _V20_POINTS)
 
 
 # ---------------------------------------------------------------------------
 # v21: trained-IVF + PQ — the composition the v18→v20 measurements built
 # ---------------------------------------------------------------------------
-def _tivfpq_topk_sql(
-    iters: int, nq: int, seeds: tuple = IVF_SEED_IDS, nprobe: int = N_PROBE
-) -> str:
-    """IVFADC oracle with the TRAINED coarse quantizer: _pq_adc_ctes'
-    codebook/codes/query side + the trained-centroid fragment for
-    cells/probes + the shared cand/adc/tail.  ``seeds``/``nprobe``
-    parameterize the layout (v21 = defaults; v26 = the serving layout)."""
-    return f"""
-    WITH {_pq_adc_ctes(iters, nq)},
-    {_tivf_centroid_sql(TIVF_ITERS, seeds)},
-    ivfranked AS (
-      SELECT e.vec_id, t.cid,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_COS_SQL.format(a="e.embedding", b="t.cwe")} DESC, t.cid) AS rn
-      FROM embeddings e, tcw t),
-    cells AS (SELECT vec_id, cid AS cell FROM ivfranked WHERE rn = 1),
-    probes AS (SELECT vec_id AS qid, cid AS cell FROM ivfranked
-               WHERE vec_id < {nq} AND rn <= {nprobe}),
-    cand AS (
-      SELECT p.qid, x.vec_id
-      FROM probes p JOIN cells x ON x.cell = p.cell AND x.vec_id <> p.qid),
-    adc AS (
-      SELECT cd.qid, c2.vec_id,
-             CAST(SUM(qp.qdot6) AS DOUBLE) / 1e6 AS adc,
-             CAST(SUM(c2.cw_ss6) AS DOUBLE) / 1e6 AS recon_ss
-      FROM codes c2
-      JOIN cand cd ON cd.vec_id = c2.vec_id
-      JOIN qparts qp ON qp.qid = cd.qid AND qp.m = c2.m AND qp.code = c2.code
-      GROUP BY cd.qid, c2.vec_id),
-    {_PQ_TAIL_SQL}
-    """
-
-
 @_register(
     "v21_tivfpq_topk",
     f"Trained-IVF + PQ top-{TOP_K}: v13's composed serving plan with the "
@@ -2837,11 +2615,11 @@ def _tivfpq_topk_sql(
     "— doubling every query's index read — would.  Plan shape identical "
     "to v13: all-equi-join, candidate cells and ADC lookup broadcast, "
     "codes never shuffle.",
-    _tivfpq_topk_sql(PQ_ITERS, N_QUERY_VECS),
+    _tivfpq_topk_sql(TRAINED, N_QUERY_VECS),
     ("similarity", "ann", "ivf", "pq", "trained", "pipeline"),
 )
 def v21(spark, sf_dir):
-    return _ivfpq_topk_plan(spark, sf_dir, N_QUERY_VECS, trained=True)
+    return _ivfpq_topk_plan(spark, sf_dir, TRAINED)
 
 
 @_register(
@@ -2856,11 +2634,11 @@ def v21(spark, sf_dir):
     "every cell disables the coarse filter regardless of quantizer — "
     "the cross-quantizer invariant the sweep tests pin).  Same fused "
     "machinery as v18: one ADC pass, two running-count window passes.",
-    _nprobe_sweep_sql(trained=True),
+    _nprobe_sweep_sql(TRAINED),
     ("similarity", "ann", "ivf", "pq", "eval", "calibration", "trained", "pipeline"),
 )
 def v22(spark, sf_dir):
-    return _nprobe_sweep_plan(spark, sf_dir, trained=True)
+    return _nprobe_sweep_plan(spark, sf_dir, TRAINED)
 
 
 # ---------------------------------------------------------------------------
@@ -2889,85 +2667,16 @@ def v22(spark, sf_dir):
     "DECISIVELY, and THAT is the signal to re-point serving at the "
     "residual index.  One ground-truth artifact, both encodings' real "
     "plans over the same trained cells, one stacked output.",
-    f"""
-    WITH {_EXACT_V12_CTES},
-    rawq AS (SELECT qid, vec_id FROM ({_tivfpq_topk_sql(PQ_ITERS, V12_NQ)})),
-    resq AS (SELECT qid, vec_id FROM ({_rivfpq_topk_sql(PQ_ITERS, V12_NQ, trained=True)})),
-    got AS (
-      SELECT 'raw' AS encoding, qid, vec_id FROM rawq
-      UNION ALL
-      SELECT 'residual' AS encoding, qid, vec_id FROM resq)
-    SELECT e.qid, enc.encoding, CAST(COUNT(*) AS BIGINT) AS n_topk,
-           CAST(SUM(CASE WHEN g.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_recovered,
-           ROUND(SUM(CASE WHEN g.vec_id IS NOT NULL THEN 1 ELSE 0 END) * 1.0
-                 / COUNT(*), 4) AS recall
-    FROM exact e
-    CROSS JOIN (SELECT 'raw' AS encoding UNION ALL SELECT 'residual') enc
-    LEFT JOIN got g ON g.encoding = enc.encoding AND g.qid = e.qid
-                   AND g.vec_id = e.vec_id
-    GROUP BY e.qid, enc.encoding ORDER BY e.qid, enc.encoding
-    """,
+    _encoding_recall_sql(TRAINED),
     ("similarity", "ann", "ivf", "pq", "residual", "eval", "calibration", "trained", "pipeline"),
 )
 def v23(spark, sf_dir):
-    return _encoding_recall_plan(spark, sf_dir, trained=True)
+    return _encoding_recall_plan(spark, sf_dir, TRAINED)
 
 
 # ---------------------------------------------------------------------------
 # v24: ncells sweep — membership recall at a FIXED scan fraction
 # ---------------------------------------------------------------------------
-def _ncells_sweep_sql() -> str:
-    """Three trained quantizers (4/8/16 cells off the deterministic seed
-    pool, tagged CTE name-spaces) + one membership-recall stack — v20's
-    eval shape swept along the ncells axis at constant nprobe/ncells."""
-    blocks, hits, keys = [], [], []
-    for n in NCELLS_SWEEP:
-        tag = f"c{n}_"
-        npb = max(1, n // 4)
-        blocks.append(_tivf_centroid_sql(TIVF_ITERS, TIVF_SEED_POOL[:n], tag))
-        blocks.append(
-            f"""{tag}ranked AS (
-      SELECT e.vec_id, t.cid,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_COS_SQL.format(a="e.embedding", b="t.cwe")} DESC, t.cid) AS rn
-      FROM embeddings e, {tag}tcw t)"""
-        )
-        blocks.append(
-            f"{tag}cells AS (SELECT vec_id, cid AS cell FROM {tag}ranked WHERE rn = 1)"
-        )
-        blocks.append(
-            f"""{tag}probes AS (SELECT vec_id AS qid, cid AS cell FROM {tag}ranked
-               WHERE vec_id < {V12_NQ} AND rn <= {npb})"""
-        )
-        hits.append(
-            f"""
-      SELECT {n} AS ncells, x.qid, x.vec_id
-      FROM exact x
-      JOIN {tag}cells cl ON cl.vec_id = x.vec_id
-      JOIN {tag}probes p ON p.qid = x.qid AND p.cell = cl.cell"""
-        )
-        keys.append(f"SELECT {n} AS ncells")
-    sep = ",\n    "
-    blocks_sql = sep.join(blocks)
-    hits_sql = " UNION ALL ".join(hits)
-    keys_sql = " UNION ALL ".join(keys)
-    return f"""
-    WITH {_EXACT_V12_CTES},
-    {blocks_sql},
-    hits AS ({hits_sql})
-    SELECT e.qid, CAST(k.ncells AS INT) AS ncells, CAST(COUNT(*) AS BIGINT) AS n_topk,
-           CAST(SUM(CASE WHEN h.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_recovered,
-           ROUND(SUM(CASE WHEN h.vec_id IS NOT NULL THEN 1 ELSE 0 END) * 1.0
-                 / COUNT(*), 4) AS recall
-    FROM exact e
-    CROSS JOIN ({keys_sql}) k
-    LEFT JOIN hits h ON h.ncells = k.ncells AND h.qid = e.qid AND h.vec_id = e.vec_id
-    GROUP BY e.qid, k.ncells ORDER BY e.qid, k.ncells
-    """
-
-
 @_register(
     "v24_ncells_sweep",
     f"Coarse-quantizer NCELLS sweep: {TOP_K}-NN cell-membership recall "
@@ -3001,62 +2710,21 @@ def _ncells_sweep_sql() -> str:
     "row pins to v20's trained row (test-gated).  Same integer-exact "
     "spherical-Lloyd training and eval discipline as v19/v20; one "
     "ground-truth artifact, one stacked output.",
-    _ncells_sweep_sql(),
+    _membership_recall_sql("ncells", _V24_POINTS),
     ("similarity", "ann", "ivf", "eval", "calibration", "trained", "pipeline"),
 )
 def v24(spark, sf_dir):
-    exact = _exact_topk_v12(spark, sf_dir).select("qid", "vec_id")
-    out = None
-    for n in NCELLS_SWEEP:
-        _, cells, probes = _tivf_cells_probes(
-            spark, sf_dir, max(1, n // 4), V12_NQ, seeds=TIVF_SEED_POOL[:n]
-        )
-        # broadcast ground truth vs corpus-sized cells — the v9 rationale
-        hit = (
-            F.broadcast(exact).join(cells, "vec_id")
-            .join(
-                F.broadcast(probes.select("qid", "cell", F.lit(1).alias("hit"))),
-                ["qid", "cell"],
-                "left",
-            )
-            .groupBy("qid")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_topk"),
-                F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias("n_recovered"),
-            )
-            .select(
-                "qid",
-                F.lit(n).cast("int").alias("ncells"),
-                "n_topk",
-                "n_recovered",
-                F.round(F.col("n_recovered") / F.col("n_topk"), 4).alias("recall"),
-            )
-        )
-        out = hit if out is None else out.unionByName(hit)
-    return out.orderBy("qid", "ncells")
+    return _membership_recall_plan(spark, sf_dir, "ncells", _V24_POINTS)
 
 
 # ---------------------------------------------------------------------------
 # v25/v26: the SERVING layout as declared queries (driver-attested)
 # ---------------------------------------------------------------------------
-# The layout serving.py dispatches to (SERVING_NCELLS=32 trained cells,
-# nprobe 8 = the calibration default's 25% scan fraction — the r13 flip,
-# acting on v24's r12 ncells=32 extension exactly as r12 acted on 16:
-# composed v21-shape recall@5 0.408 -> 0.460 (sf0.01) and 0.400 -> 0.404
-# (sf0.001), membership recall 0.520 -> 0.608 / 0.572 -> 0.600, all at
-# the same 25% of the index read per query, strictly-no-worse test-gated
-# in test_serving_default).  Declared here so the layout a user actually
-# gets is DRIVER-ATTESTED, not only test-gated; test_serving_default pins
-# serving.ann_topk/ivfpq_topk row-equal to v25/v26, so the dispatch
-# point and the declared queries cannot drift apart silently.
-V25_NPROBE = 8  # = SERVING_NCELLS // 4, the constant scan fraction
-# The serving layout's pool is an explicit PREFIX of the sweep pool: v24's
-# ncells axis may grow the pool (it did in r12, 16 -> 32 for the ncells=32
-# point) without silently changing the declared serving layout.  serving.py
-# guards SERVING_NCELLS == len(V25_POOL).  Rolling back = 16 here + in
-# serving.SERVING_NCELLS.
-V25_NCELLS = 32
-V25_POOL = TIVF_SEED_POOL[:V25_NCELLS]
+# The SERVING quantizer as declared queries, so the layout a user
+# actually gets is oracle-checked, not only test-gated:
+# test_serving_default pins serving.ann_topk/ivfpq_topk row-equal to
+# v25/v26, so the dispatch point and the declared queries cannot drift
+# apart silently.
 
 
 @_register(
@@ -3073,11 +2741,11 @@ V25_POOL = TIVF_SEED_POOL[:V25_NCELLS]
     "0.572 -> 0.600 (sf0.001) at constant bytes read.  Plan shape "
     "identical to v19: centroids broadcast, cells the partition key, a "
     "query reads nprobe/ncells of the corpus.",
-    _tivf_topk_sql(V25_NPROBE, V25_POOL),
+    _tivf_topk_sql(SERVING, V25_NPROBE),
     ("similarity", "ann", "ivf", "trained", "serving", "pipeline"),
 )
 def v25(spark, sf_dir):
-    return _tivf_topk_plan(spark, sf_dir, V25_NPROBE, V25_POOL)
+    return _tivf_topk_plan(spark, sf_dir, SERVING, V25_NPROBE)
 
 
 @_register(
@@ -3092,34 +2760,19 @@ def v25(spark, sf_dir):
     "(sf0.001) at equal scan, strictly-no-worse test-gated.  Plan shape "
     "identical to v13/v21: all-equi-join, candidate cells and ADC lookup "
     "broadcast, codes never shuffle.",
-    _tivfpq_topk_sql(PQ_ITERS, N_QUERY_VECS, V25_POOL, V25_NPROBE),
+    _tivfpq_topk_sql(SERVING, N_QUERY_VECS, V25_NPROBE),
     ("similarity", "ann", "ivf", "pq", "trained", "serving", "pipeline"),
 )
 def v26(spark, sf_dir):
-    return _ivfpq_topk_plan(
-        spark,
-        sf_dir,
-        N_QUERY_VECS,
-        trained=True,
-        nprobe=V25_NPROBE,
-        seeds=V25_POOL,
-    )
+    return _ivfpq_topk_plan(spark, sf_dir, SERVING, nprobe=V25_NPROBE)
 
 
-def _filtered_tivf_topk_sql(nprobe: int, seeds: tuple) -> str:
+def _filtered_tivf_topk_sql(quantizer: Quantizer, nprobe: int) -> str:
     """v27's oracle: _tivf_topk_sql with the metadata predicate composed
     into the candidate join (e.label = qv.qlabel) — the filtered-search
     twin of the serving layout."""
     return f"""
-    WITH {_tivf_centroid_sql(TIVF_ITERS, seeds)},
-    ranked AS (
-      SELECT e.vec_id, c.cid,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_COS_SQL.format(a="e.embedding", b="c.cwe")} DESC, c.cid) AS rn
-      FROM embeddings e, tcw c),
-    cells AS (SELECT vec_id, cid AS cell FROM ranked WHERE rn = 1),
-    probes AS (SELECT vec_id AS qid, cid AS cell FROM ranked
-               WHERE vec_id < {N_QUERY_VECS} AND rn <= {nprobe}),
+    WITH {_tivf_cells_probes_sql(quantizer, N_QUERY_VECS, nprobe)},
     qv AS (SELECT vec_id AS qid, embedding AS qe, label AS qlabel FROM embeddings
            WHERE vec_id < {N_QUERY_VECS}),
     cand AS (
@@ -3155,11 +2808,11 @@ def _filtered_tivf_topk_sql(nprobe: int, seeds: tuple) -> str:
     "partition/cluster key under the cell layout and the same plan "
     "prunes files.  Plan shape otherwise identical to v25 (centroids "
     "broadcast, cells the partition key).",
-    _filtered_tivf_topk_sql(V25_NPROBE, V25_POOL),
+    _filtered_tivf_topk_sql(SERVING, V25_NPROBE),
     ("similarity", "ann", "ivf", "trained", "serving", "filtered", "pipeline"),
 )
 def v27(spark, sf_dir):
-    e, cells, probes = _tivf_cells_probes(spark, sf_dir, V25_NPROBE, seeds=V25_POOL)
+    e, cells, probes = _tivf_cells_probes(spark, sf_dir, SERVING, V25_NPROBE)
     probes = probes.drop("rn")
     full = _emb(spark, sf_dir).select("vec_id", "embedding", "label")
     qv = full.where(F.col("vec_id") < N_QUERY_VECS).select(
@@ -3216,7 +2869,7 @@ def _filtered_exact_sql() -> str:
     "one brute-force pass over the label slice.",
     f"""
     WITH gt AS ({_filtered_exact_sql()}),
-    ap AS ({_filtered_tivf_topk_sql(V25_NPROBE, V25_POOL)}),
+    ap AS ({_filtered_tivf_topk_sql(SERVING, V25_NPROBE)}),
     hit AS (
       SELECT gt.qid, gt.vec_id,
              CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END AS got
@@ -3304,7 +2957,11 @@ def _label_nprobe(full, ncells: int, base_nprobe: int):
 
 
 def _adaptive_filtered_topk_plan(
-    spark, sf_dir, nq: int = N_QUERY_VECS, seeds: tuple = None, base_nprobe: int = None
+    spark,
+    sf_dir,
+    nq: int = N_QUERY_VECS,
+    quantizer: Quantizer = SERVING,
+    base_nprobe: int = V25_NPROBE,
 ):
     """v27's filtered plan with the per-label probe dispatch: probes are
     built to the FULL cell list (rn <= ncells) once, then each query
@@ -3312,11 +2969,10 @@ def _adaptive_filtered_topk_plan(
     is unchanged from v27 — centroids/probes/npl broadcast, cells the
     partition key, the label predicate composed into the candidate
     stream before the cosine."""
-    seeds = V25_POOL if seeds is None else seeds
-    base_nprobe = V25_NPROBE if base_nprobe is None else base_nprobe
-    e, cells, probes = _tivf_cells_probes(spark, sf_dir, len(seeds), nq, seeds=seeds)
+    ncells = len(quantizer.seeds)
+    e, cells, probes = _tivf_cells_probes(spark, sf_dir, quantizer, ncells, nq)
     full = _emb(spark, sf_dir).select("vec_id", "embedding", "label")
-    npl = _label_nprobe(full, len(seeds), base_nprobe)
+    npl = _label_nprobe(full, ncells, base_nprobe)
     qv = (
         full.where(F.col("vec_id") < nq)
         .select(
@@ -3346,37 +3002,32 @@ def _adaptive_filtered_topk_plan(
     )
 
 
-def _adaptive_filtered_sql(seeds: tuple, base_nprobe: int, nq: int = N_QUERY_VECS) -> str:
+def _adaptive_filtered_sql(quantizer: Quantizer, base_nprobe: int, nq: int = N_QUERY_VECS) -> str:
     """v29's oracle: _filtered_tivf_topk_sql with the probe depth joined
     per query label off the same integer budget rule."""
-    target = FILTERED_SHORTLIST_MULT * TOP_K * len(seeds)
+    ncells = len(quantizer.seeds)
+    target = FILTERED_SHORTLIST_MULT * TOP_K * ncells
     return f"""
-    WITH {_tivf_centroid_sql(TIVF_ITERS, seeds)},
-    ranked AS (
-      SELECT e.vec_id, c.cid,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_COS_SQL.format(a="e.embedding", b="c.cwe")} DESC, c.cid) AS rn
-      FROM embeddings e, tcw c),
-    cells AS (SELECT vec_id, cid AS cell FROM ranked WHERE rn = 1),
+    WITH {_tivf_cells_probes_sql(quantizer, nq, ncells)},
     lc AS (SELECT label, COUNT(*) AS cnt FROM embeddings GROUP BY label),
     np AS (
       SELECT label,
-             LEAST({len(seeds)}, GREATEST({base_nprobe},
+             LEAST({ncells}, GREATEST({base_nprobe},
                CAST(FLOOR(({target} + GREATEST(cnt - 1, 1) - 1) * 1.0
                           / GREATEST(cnt - 1, 1)) AS BIGINT))) AS npl
       FROM lc),
     qv AS (SELECT vec_id AS qid, embedding AS qe, label AS qlabel FROM embeddings
            WHERE vec_id < {nq}),
-    probes AS (
-      SELECT r.vec_id AS qid, r.cid AS cell
-      FROM ranked r
-      JOIN qv ON qv.qid = r.vec_id
+    aprobes AS (
+      SELECT p.qid, p.cell
+      FROM probes p
+      JOIN qv ON qv.qid = p.qid
       JOIN np ON np.label = qv.qlabel
-      WHERE r.rn <= np.npl),
+      WHERE p.rn <= np.npl),
     cand AS (
       SELECT p.qid, x.vec_id,
              {_COS_SQL.format(a="qv.qe", b="e.embedding")} AS sim
-      FROM probes p
+      FROM aprobes p
       JOIN cells x ON x.cell = p.cell AND x.vec_id <> p.qid
       JOIN embeddings e ON e.vec_id = x.vec_id
       JOIN qv ON qv.qid = p.qid AND e.label = qv.qlabel),
@@ -3408,7 +3059,7 @@ def _adaptive_filtered_sql(seeds: tuple, base_nprobe: int, nq: int = N_QUERY_VEC
     "selectivity table is one |labels|-row broadcast aggregate, probes/"
     "centroids broadcast, cells the partition key; at 100 TB the same "
     "per-label counts come from table statistics instead of a scan.",
-    _adaptive_filtered_sql(V25_POOL, V25_NPROBE),
+    _adaptive_filtered_sql(SERVING, V25_NPROBE),
     ("similarity", "ann", "ivf", "trained", "serving", "filtered", "dispatch", "pipeline"),
 )
 def v29(spark, sf_dir):
@@ -3468,8 +3119,6 @@ def v15(spark, sf_dir):
 # (the engine side gates once, in _emb; v10 is exempt by design — it is
 # the monitor that reports what the gate excludes)
 # ---------------------------------------------------------------------------
-import dataclasses as _dc  # noqa: E402
-
 for _name in (
     "v1_cosine_topk",
     "v2_lsh_bucket",
@@ -3501,5 +3150,5 @@ for _name in (
     "v28_filtered_recall",
     "v29_adaptive_filtered_topk",
 ):
-    QUERIES[_name] = _dc.replace(QUERIES[_name], oracle=_gate_oracle(QUERIES[_name].oracle))
+    QUERIES[_name] = dataclasses.replace(QUERIES[_name], oracle=_gate_oracle(QUERIES[_name].oracle))
 del _name

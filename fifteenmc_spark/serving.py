@@ -19,34 +19,46 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-# The coarse quantizer every serving surface uses unless the caller
-# explicitly asks for the seed layout.  "trained" = spherical-k-means
-# cells — the r10 measurement chain's pick (v20: 2-probe cell
-# membership recall 0.35 -> 0.51; v21: composed IVFADC recall@5
-# 0.27 -> 0.38 at identical nprobe/bytes/shortlist; v22: trained@1
-# nprobe matches seed@2, halving the index bytes read per query).  The
-# seed layout stays first-class as the calibration baseline (v5/v13 and
-# their oracles are unchanged); flipping this constant back is the
-# entire rollback.
-DEFAULT_QUANTIZER = "trained"
+from .operators.dedup import _max_df, minhash_sig_index, shingle_index, simhash_code_index
+from .operators.similarity import (
+    N_CELLS,
+    N_PROBE,
+    N_QUERY_VECS,
+    SEED,
+    SERVING,
+    SIG_PLANES,
+    TIVF_SEED_POOL,
+    TRAINED,
+    V12_NQ,
+    V25_NPROBE,
+    _adaptive_filtered_topk_plan,
+    _emb,
+    _exact_topk,
+    _exact_topk_v12,
+    _ivfpq_topk_plan,
+    _pq_index,
+    _rpq_index,
+    _sig,
+    _tivf_cells_probes,
+    _tivf_centroids,
+    _tivf_topk_plan,
+)
 
-# The serving CELL COUNT (r11/r12/r13 verdict chain, acting on what v24
-# measures each round): ncells is the knob that grows with the corpus at
-# 100 TB (FAISS sizes it ~sqrt(N)), and each v24 extension has measured
-# finer cells buying recall at CONSTANT scan fraction.  8 -> 16 (r12
-# flip): membership recall 0.500 -> 0.520 (sf0.01), 0.448 -> 0.572
-# (sf0.001).  16 -> 32 (r13 flip): membership 0.520 -> 0.608 (sf0.01),
-# 0.572 -> 0.600 (sf0.001); composed v21-shape IVFADC recall@5
-# 0.408 -> 0.460 (sf0.01) and 0.400 -> 0.404 (sf0.001) at the same 25%
-# scan (test-gated strictly-no-worse in test_serving_default.py).
-# SERVING_NPROBE holds the scan fraction at the 8-cell default's
-# nprobe/ncells = 2/8: a serving query still reads 25% of the index —
-# the recall gain is pure quantizer capacity, not extra bytes.  The
-# declared queries v19/v21 stay on the 8-cell layout as calibration
-# baselines with unchanged oracles; rolling back = SERVING_NCELLS = 16
-# here + V25_NCELLS = 16 in similarity.py.
-SERVING_NCELLS = 32
-SERVING_NPROBE = SERVING_NCELLS // 4  # = the calibration scan fraction
+# The serving layout is the SERVING quantizer (operators/similarity.py):
+# 32 spherical-k-means-trained cells.  Each step to it acted on a
+# measurement — trained over seed cells (v20: 2-probe
+# membership recall 0.35 -> 0.51; v21: composed IVFADC recall@5
+# 0.27 -> 0.38 at identical nprobe/bytes/shortlist), then ncells 8 -> 16
+# -> 32 at CONSTANT scan fraction (v24: membership 0.520 -> 0.608 at
+# sf0.01, 0.572 -> 0.600 at sf0.001; composed v21-shape recall@5
+# 0.408 -> 0.460 and 0.400 -> 0.404, test-gated strictly-no-worse in
+# test_serving_default.py).  SERVING_NPROBE holds the scan fraction at
+# the 8-cell calibration layout's nprobe/ncells = 2/8: a serving query
+# still reads 25% of the index — the recall gain is pure quantizer
+# capacity, not extra bytes.  The 8-cell queries (v5/v13 seed, v19/v21
+# trained) stay registered as calibration baselines.
+SERVING_NCELLS = len(SERVING.seeds)
+SERVING_NPROBE = V25_NPROBE  # ncells / 4: the calibration scan fraction
 
 # The corpus-adaptive capacity rule (r15, acting on the banked r14
 # ncells_axis receipts).  At 100 TB ncells is the knob that must GROW
@@ -87,8 +99,6 @@ def serving_seeds_for(n_vectors: int) -> tuple:
     declared calibration construction — extended past 32 on the same
     deterministic stride the ncells_axis measurement used, every id
     < 500 so it exists at every SF and in every synth corpus)."""
-    from .operators.similarity import TIVF_SEED_POOL
-
     n = serving_ncells_for(n_vectors)
     pool = list(TIVF_SEED_POOL)
     j = 0
@@ -99,49 +109,17 @@ def serving_seeds_for(n_vectors: int) -> tuple:
         j += 1
     return tuple(pool[:n])
 
-# seed-quantizer ROLLBACK plans, one per tier: the trained default builds
-# the parameterized serving plan directly (ann_topk/ivfpq_topk below), so
-# these names are read ONLY on the DEFAULT_QUANTIZER='seed' branch
-_ANN_SEED_QUERY = "v5_ivf_topk"
-_IVFPQ_SEED_QUERY = "v13_ivfpq_topk"
-
-
-def serving_seeds() -> tuple:
-    """The DEFAULT quantizer's seed pool: the first SERVING_NCELLS ids of
-    the deterministic TIVF_SEED_POOL (whose first 8 ARE the calibration
-    layout's IVF_SEED_IDS — the v24 sweep's construction, so the 8-cell
-    calibration rows stay directly comparable)."""
-    from .operators.similarity import V25_POOL
-
-    # raise, not assert: declared layout == dispatch layout must survive
-    # python -O (r12 ADVICE — bare asserts vanish under optimized bytecode)
-    if SERVING_NCELLS != len(V25_POOL):
-        raise RuntimeError(
-            f"serving layout drift: SERVING_NCELLS={SERVING_NCELLS} but the "
-            f"declared v25 pool has {len(V25_POOL)} cells"
-        )
-    return V25_POOL
-
 
 def serving_cells_probes(
     spark: SparkSession, sf_dir: str, max_probe: int | None = None, nq: int | None = None
 ):
-    """(e, cells, probes) for the DEFAULT serving quantizer AND layout —
-    the single dispatch point batch plans and index builders share, so
-    'which cells does serving use' is answered in exactly one place.
-    ``max_probe`` defaults to SERVING_NPROBE (the constant-scan-fraction
-    probe count)."""
-    from .operators.similarity import (
-        N_QUERY_VECS,
-        _ivf_cells_probes,
-        _tivf_cells_probes,
-    )
-
+    """(e, cells, probes) of the SERVING quantizer — the single dispatch
+    point batch plans and index builders share, so 'which cells does
+    serving use' is answered in exactly one place.  ``max_probe``
+    defaults to SERVING_NPROBE (the constant-scan-fraction probe
+    count)."""
     mp = SERVING_NPROBE if max_probe is None else max_probe
-    q = N_QUERY_VECS if nq is None else nq
-    if DEFAULT_QUANTIZER == "trained":
-        return _tivf_cells_probes(spark, sf_dir, mp, q, seeds=serving_seeds())
-    return _ivf_cells_probes(spark, sf_dir, mp, q)
+    return _tivf_cells_probes(spark, sf_dir, SERVING, mp, N_QUERY_VECS if nq is None else nq)
 
 
 def filtered_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -152,121 +130,60 @@ def filtered_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     clamped to [SERVING_NPROBE, SERVING_NCELLS]; unselective predicates
     serve at exactly the fixed-nprobe v27 plan.  Row-equality pinned to
     the declared query v29 in test_serving_default."""
-    from .operators.similarity import _adaptive_filtered_topk_plan
-
     return _adaptive_filtered_topk_plan(
-        spark, sf_dir, seeds=serving_seeds(), base_nprobe=SERVING_NPROBE
+        spark, sf_dir, quantizer=SERVING, base_nprobe=SERVING_NPROBE
     )
 
 
 def serving_centroids(spark: SparkSession, sf_dir: str) -> list[tuple[int, list[float]]]:
-    """The DEFAULT quantizer's centroid table collected as the
+    """The SERVING quantizer's centroid table collected as the
     broadcast-small closure constant the streaming tiers take
     ((cid, vector) sorted by cid — n_cells x dim, a few KB).  Streaming
     ann/pq_ann stay quantizer-agnostic operators; this is where a
     serving session gets 'the' centroids without naming a quantizer."""
-    from pyspark.sql import functions as F
-
-    from .operators.similarity import IVF_SEED_IDS, _emb, _tivf_centroids
-
-    if DEFAULT_QUANTIZER == "trained":
-        rows = _tivf_centroids(spark, sf_dir, serving_seeds()).orderBy("cid").collect()
-        return [(r["cid"], list(r["cwe"])) for r in rows]
-    rows = (
-        _emb(spark, sf_dir)
-        .where(F.col("vec_id").isin(*IVF_SEED_IDS))
-        .orderBy("vec_id")
-        .collect()
-    )
-    return [(r["vec_id"], list(r["embedding"])) for r in rows]
+    rows = _tivf_centroids(spark, sf_dir, SERVING).orderBy("cid").collect()
+    return [(r["cid"], list(r["cwe"])) for r in rows]
 
 
 def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The batch ANN serving default: cell-probe top-k with exact
-    in-cell cosine over the DEFAULT quantizer at the SERVING layout
-    (SERVING_NCELLS trained cells, SERVING_NPROBE probes — v19's plan
-    shape at the v24-measured capacity; v19/v5 are the 8-cell
-    calibration baselines)."""
-    from .operators.relational import QUERIES
-    from .operators.similarity import _tivf_topk_plan
-
-    if DEFAULT_QUANTIZER == "trained":
-        return _tivf_topk_plan(spark, sf_dir, SERVING_NPROBE, serving_seeds())
-    return QUERIES[_ANN_SEED_QUERY].build(spark, sf_dir)
+    in-cell cosine over the SERVING quantizer at SERVING_NPROBE probes
+    (v19's plan shape at the v24-measured capacity; v19/v5 are the
+    8-cell calibration baselines)."""
+    return _tivf_topk_plan(spark, sf_dir, SERVING, SERVING_NPROBE)
 
 
 def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The codes-only (IVFADC) serving default: SERVING-layout trained
-    cells x raw PQ codes x exact shortlist re-rank (v21's plan shape at
-    the v24-measured capacity; v21/v13 are the 8-cell calibration
+    """The codes-only (IVFADC) serving default: SERVING-quantizer cells
+    x raw PQ codes x exact shortlist re-rank (v21's plan shape at the
+    v24-measured capacity; v21/v13 are the 8-cell calibration
     baselines)."""
-    from .operators.relational import QUERIES
-    from .operators.similarity import N_QUERY_VECS, _ivfpq_topk_plan
-
-    if DEFAULT_QUANTIZER == "trained":
-        return _ivfpq_topk_plan(
-            spark,
-            sf_dir,
-            N_QUERY_VECS,
-            trained=True,
-            nprobe=SERVING_NPROBE,
-            seeds=serving_seeds(),
-        )
-    return QUERIES[_IVFPQ_SEED_QUERY].build(spark, sf_dir)
+    return _ivfpq_topk_plan(spark, sf_dir, SERVING, nprobe=SERVING_NPROBE)
 
 
 def warm_session_index(spark: SparkSession, sf_dir: str) -> dict[str, int]:
-    from .operators.dedup import (
-        _max_df,
-        minhash_sig_index,
-        shingle_index,
-        simhash_code_index,
-    )
-    from .operators.similarity import (
-        N_CELLS,
-        N_PROBE,
-        SIG_PLANES,
-        V12_NQ,
-        _emb,
-        _exact_topk,
-        _exact_topk_v12,
-        _ivf_cells_probes,
-        _pq_index,
-        _rpq_index,
-        _sig,
-        _tivf_cells_probes,
-    )
-
     counts: dict[str, int] = {}
     counts["emb"] = _emb(spark, sf_dir).count()
     counts[f"sig{SIG_PLANES}"] = _sig(spark, sf_dir, SIG_PLANES).count()
-    _, cells, probes = _ivf_cells_probes(spark, sf_dir, N_PROBE)
-    counts["ivf_cells"] = cells.count()
-    counts["ivf_probes"] = probes.count()
-    _, _, probes_w = _ivf_cells_probes(spark, sf_dir, N_PROBE, V12_NQ)
-    counts["ivf_probes_eval"] = probes_w.count()
-    _, _, probes_sweep = _ivf_cells_probes(spark, sf_dir, N_CELLS, V12_NQ)
-    counts["ivf_probes_sweep"] = probes_sweep.count()
-    _, tcells, tprobes = _tivf_cells_probes(spark, sf_dir, N_PROBE)
-    counts["tivf_cells"] = tcells.count()
-    counts["tivf_probes"] = tprobes.count()
-    # the SERVING layout (SERVING_NCELLS trained cells at the constant
-    # scan fraction) — what ann_topk/ivfpq_topk and the streaming tiers
-    # actually serve
+    # the 8-cell calibration quantizers: search probes, eval probes, and
+    # the full-probe table the fused nprobe sweeps (v18/v22) read
+    for name, q in (("ivf", SEED), ("tivf", TRAINED)):
+        _, cells, probes = _tivf_cells_probes(spark, sf_dir, q, N_PROBE)
+        counts[f"{name}_cells"] = cells.count()
+        counts[f"{name}_probes"] = probes.count()
+        _, _, probes_w = _tivf_cells_probes(spark, sf_dir, q, N_PROBE, V12_NQ)
+        counts[f"{name}_probes_eval"] = probes_w.count()
+        _, _, probes_sweep = _tivf_cells_probes(spark, sf_dir, q, N_CELLS, V12_NQ)
+        counts[f"{name}_probes_sweep"] = probes_sweep.count()
+    # the SERVING layout — what ann_topk/ivfpq_topk and the streaming
+    # tiers actually serve
     _, scells, sprobes = serving_cells_probes(spark, sf_dir)
     counts[f"tivf{SERVING_NCELLS}_cells"] = scells.count()
     counts[f"tivf{SERVING_NCELLS}_probes"] = sprobes.count()
-    _, _, tprobes_w = _tivf_cells_probes(spark, sf_dir, N_PROBE, V12_NQ)
-    counts["tivf_probes_eval"] = tprobes_w.count()
-    # full-probe sweep table for v22 — warmed exactly like the seed
-    # quantizer's (ivf_probes_sweep for v18), so the two fused sweeps
-    # bench under the same warm-index methodology
-    _, _, tprobes_sweep = _tivf_cells_probes(spark, sf_dir, N_CELLS, V12_NQ)
-    counts["tivf_probes_sweep"] = tprobes_sweep.count()
     _, _, pq_codes = _pq_index(spark, sf_dir)
     counts["pq_codes"] = pq_codes.count()
-    counts["rpq_codes"] = _rpq_index(spark, sf_dir)[2].count()
-    counts["trpq_codes"] = _rpq_index(spark, sf_dir, trained=True)[2].count()
+    counts["rpq_codes"] = _rpq_index(spark, sf_dir, SEED)[2].count()
+    counts["trpq_codes"] = _rpq_index(spark, sf_dir, TRAINED)[2].count()
     counts["exact_topk"] = _exact_topk(spark, sf_dir).count()
     counts["exact_topk_v12"] = _exact_topk_v12(spark, sf_dir).count()
     counts["shingles"] = shingle_index(spark, sf_dir).count()

@@ -58,7 +58,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..operators.similarity import PQ_M, TOP_K
+from ..operators.similarity import PQ_M, SERVING, TOP_K, Quantizer, _pq_index, _tivf_cells_probes
 from .ann import OUTPUT_SCHEMA, STATE_SCHEMA, STATE_TTL_MS, _merge_factory, probe_cells_col
 
 # per-query scan-side features: probe cells + the M×K ADC lookup table
@@ -70,32 +70,17 @@ _QFEAT_SCHEMA = StructType(
 )
 
 
-def build_pq_serving_index(spark, sf_dir, nprobe: int, quantizer: str | None = None):
-    """(static, centroids, codebook): the codes-only serving layout.
+def build_pq_serving_index(spark, sf_dir, nprobe: int, quantizer: Quantizer = SERVING):
+    """(static, codebook): the codes-only serving layout over
+    ``quantizer``'s cells (default: the SERVING quantizer, whatever
+    index the batch evals picked — same operator for any quantizer).
 
     static = (vec_id, cell, codes array<int> dense 0..K-1 per sub-block,
     recon_ss6) — derived from the session-index artifacts, no embedding
     column.  codebook = {m: (sorted cids, ndarray K×PQ_SUB)} for the
-    query kernel's closure.  ``quantizer`` picks the cell layout: "seed"
-    (v13's cells) or "trained" (the SERVING layout — serving.SERVING_NCELLS
-    spherical-k-means cells, the v24-measured capacity); the default
-    (None) follows ``serving.DEFAULT_QUANTIZER`` — the serving tier
-    follows whichever index the batch evals picked, same operator
-    either way."""
-    from ..operators.similarity import (
-        _ivf_cells_probes,
-        _pq_index,
-        _tivf_cells_probes,
-    )
-    from ..serving import DEFAULT_QUANTIZER, serving_seeds
-
-    if quantizer is None:
-        quantizer = DEFAULT_QUANTIZER
+    query kernel's closure."""
     _, cw, codes = _pq_index(spark, sf_dir)
-    if quantizer == "trained":
-        _, cells, _ = _tivf_cells_probes(spark, sf_dir, nprobe, seeds=serving_seeds())
-    else:
-        _, cells, _ = _ivf_cells_probes(spark, sf_dir, nprobe)
+    _, cells, _ = _tivf_cells_probes(spark, sf_dir, quantizer, nprobe)
 
     books: dict[int, tuple[list[int], np.ndarray]] = {}
     rows = cw.select("m", "cid", "cwe").collect()

@@ -192,4 +192,6 @@ def await_drained(q, timeout_s: float = 120.0) -> None:
             break
     if q.isActive:
         q.stop()
-    q.awaitTermination(timeout_s)
+    # the polling loop may already have spent the budget: wait only for
+    # what is left of it (awaitTermination rejects a non-positive timeout)
+    q.awaitTermination(max(deadline - _time.monotonic(), 0.1))

@@ -1157,8 +1157,9 @@ def main() -> None:
         )
         for n in (16, 32, 64, 128):
             npb = n // 4
+            quantizer = S.Quantizer(pool_t[:n], S.TIVF_ITERS)
             _, cells, probes = S._tivf_cells_probes(
-                spark, sf_dir, npb, S.V12_NQ, seeds=pool_t[:n]
+                spark, sf_dir, quantizer, npb, S.V12_NQ
             )
             hit = cells.join(
                 Fn.broadcast(probes.select("qid", "cell")), ["cell"]
@@ -1166,7 +1167,7 @@ def main() -> None:
             rec = float(
                 S._recall_agg(exact, hit).agg(Fn.avg("recall")).first()[0]
             )
-            q = S._tivf_topk_plan(spark, sf_dir, npb, pool_t[:n])
+            q = S._tivf_topk_plan(spark, sf_dir, quantizer, npb)
             q.write.format("noop").mode("overwrite").save()  # warm (trains cells)
             t0 = time.perf_counter()
             q.write.format("noop").mode("overwrite").save()
@@ -1179,8 +1180,8 @@ def main() -> None:
         # the full IVFADC pipeline is no worse than 32 at equal scan
         def _composed(nc: int) -> float:
             plan = S._ivfpq_topk_plan(
-                spark, sf_dir, S.V12_NQ, trained=True,
-                nprobe=nc // 4, seeds=pool_t[:nc],
+                spark, sf_dir, S.Quantizer(pool_t[:nc], S.TIVF_ITERS), S.V12_NQ,
+                nprobe=nc // 4,
             )
             return float(
                 S._recall_agg(exact, plan.select("qid", "vec_id"))

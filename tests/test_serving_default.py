@@ -28,13 +28,16 @@ from fifteenmc_spark.operators.similarity import (
     IVF_SEED_IDS,
     N_CELLS,
     N_PROBE,
-    N_QUERY_VECS,
+    SEED,
+    SERVING,
+    TIVF_ITERS,
     TIVF_SEED_POOL,
+    TRAINED,
     V25_POOL,
     V12_NQ,
+    Quantizer,
     _emb,
     _exact_topk_v12,
-    _ivf_cells_probes,
     _ivfpq_topk_plan,
     _recall_agg,
     _tivf_cells_probes,
@@ -48,12 +51,12 @@ def _rows(df):
 
 
 def test_serving_default_is_trained_at_32_cells():
-    assert serving.DEFAULT_QUANTIZER == "trained"
+    assert SERVING.iters == TIVF_ITERS > 0  # trained, not the seed vectors
     assert serving.SERVING_NCELLS == 32
-    assert len(serving.serving_seeds()) == serving.SERVING_NCELLS
+    assert len(SERVING.seeds) == serving.SERVING_NCELLS
     # the first 8 seed ids ARE the calibration layout's, so the 8-cell
     # rows stay directly comparable (the v24 sweep's construction)
-    assert serving.serving_seeds()[:8] == IVF_SEED_IDS
+    assert SERVING.seeds[:8] == IVF_SEED_IDS
     # constant scan fraction: serving reads the same 25% of the index per
     # query as the 8-cell calibration default (N_PROBE / N_CELLS)
     assert serving.SERVING_NPROBE / serving.SERVING_NCELLS == N_PROBE / N_CELLS
@@ -65,7 +68,7 @@ def test_ann_topk_default_pins_to_v25(spark, sf_small):
     got = _rows(serving.ann_topk(spark, sf_small))
     assert got and got == _rows(QUERIES["v25_serving_tivf_topk"].build(spark, sf_small))
     assert got == _rows(
-        _tivf_topk_plan(spark, sf_small, serving.SERVING_NPROBE, serving.serving_seeds())
+        _tivf_topk_plan(spark, sf_small, SERVING, serving.SERVING_NPROBE)
     )
     # the layout flip is real: the serving default no longer equals the
     # 8-cell calibration query (whose oracle is unchanged)
@@ -79,10 +82,8 @@ def test_ivfpq_topk_default_pins_to_v26(spark, sf_small):
         _ivfpq_topk_plan(
             spark,
             sf_small,
-            N_QUERY_VECS,
-            trained=True,
+            SERVING,
             nprobe=serving.SERVING_NPROBE,
-            seeds=serving.serving_seeds(),
         )
     )
     assert got != _rows(QUERIES["v21_tivfpq_topk"].build(spark, sf_small))
@@ -105,7 +106,7 @@ def test_serving_centroids_are_the_serving_layout_trained_table(spark, sf_small)
 def test_serving_cells_probes_default_equals_serving_layout_trained_index(spark, sf_small):
     _, dcells, dprobes = serving.serving_cells_probes(spark, sf_small)
     _, tcells, tprobes = _tivf_cells_probes(
-        spark, sf_small, serving.SERVING_NPROBE, seeds=V25_POOL
+        spark, sf_small, SERVING, serving.SERVING_NPROBE
     )
     assert _rows(dcells) == _rows(tcells)
     assert _rows(dprobes) == _rows(tprobes)
@@ -114,7 +115,7 @@ def test_serving_cells_probes_default_equals_serving_layout_trained_index(spark,
 def test_pq_serving_index_default_is_the_serving_layout(spark, sf_small):
     dstatic, _ = build_pq_serving_index(spark, sf_small, serving.SERVING_NPROBE)
     tstatic, _ = build_pq_serving_index(
-        spark, sf_small, serving.SERVING_NPROBE, quantizer="trained"
+        spark, sf_small, serving.SERVING_NPROBE, quantizer=SERVING
     )
     assert _rows(dstatic.select("vec_id", "cell")) == _rows(tstatic.select("vec_id", "cell"))
     # well over the prior 16-cell layout's count actually serves (the
@@ -122,15 +123,15 @@ def test_pq_serving_index_default_is_the_serving_layout(spark, sf_small):
     assert dstatic.select("cell").distinct().count() > 16
     # and the dispatch is real: the explicit seed layout assigns at
     # least one vector to a different cell on this corpus
-    sstatic, _ = build_pq_serving_index(spark, sf_small, N_PROBE, quantizer="seed")
+    sstatic, _ = build_pq_serving_index(spark, sf_small, N_PROBE, quantizer=SEED)
     assert _rows(sstatic.select("vec_id", "cell")) != _rows(dstatic.select("vec_id", "cell"))
 
 
 def test_seed_cells_remain_the_calibration_baseline(spark, sf_small):
     # flipping the default did NOT change the seed index or its queries:
     # the explicit seed layout still equals v5's cell table
-    _, scells, _ = _ivf_cells_probes(spark, sf_small, N_PROBE)
-    sstatic, _ = build_pq_serving_index(spark, sf_small, N_PROBE, quantizer="seed")
+    _, scells, _ = _tivf_cells_probes(spark, sf_small, SEED, N_PROBE)
+    sstatic, _ = build_pq_serving_index(spark, sf_small, N_PROBE, quantizer=SEED)
     assert _rows(sstatic.select("vec_id", "cell")) == _rows(scells)
 
 
@@ -148,14 +149,14 @@ def test_serving_layout_composed_recall_no_worse_at_equal_scan(spark, sf_small):
     prior."""
     exact = _exact_topk_v12(spark, sf_small).select("qid", "vec_id")
     base8 = _mean_recall(
-        _recall_agg(exact, _ivfpq_topk_plan(spark, sf_small, V12_NQ, trained=True))
+        _recall_agg(exact, _ivfpq_topk_plan(spark, sf_small, TRAINED, V12_NQ))
     )
     prior16 = _mean_recall(
         _recall_agg(
             exact,
             _ivfpq_topk_plan(
-                spark, sf_small, V12_NQ, trained=True, nprobe=4,
-                seeds=TIVF_SEED_POOL[:16],
+                spark, sf_small, Quantizer(TIVF_SEED_POOL[:16], TIVF_ITERS), V12_NQ,
+                nprobe=4,
             ),
         )
     )
@@ -165,10 +166,9 @@ def test_serving_layout_composed_recall_no_worse_at_equal_scan(spark, sf_small):
             _ivfpq_topk_plan(
                 spark,
                 sf_small,
+                SERVING,
                 V12_NQ,
-                trained=True,
                 nprobe=serving.SERVING_NPROBE,
-                seeds=serving.serving_seeds(),
             ),
         )
     )
@@ -186,7 +186,7 @@ def test_serving_layout_membership_recall_no_worse_at_equal_scan(spark, sf_small
 
     def membership(ncells: int, npb: int):
         _, cells, probes = _tivf_cells_probes(
-            spark, sf_small, npb, V12_NQ, seeds=TIVF_SEED_POOL[:ncells]
+            spark, sf_small, Quantizer(TIVF_SEED_POOL[:ncells], TIVF_ITERS), npb, V12_NQ
         )
         hit = cells.join(
             F.broadcast(probes.select("qid", "cell")), ["cell"]
@@ -252,7 +252,7 @@ def test_filtered_dispatch_recall_no_worse_than_fixed_nprobe(spark, sf_small):
         .select("qid", "vec_id")
     )
     fixed = _adaptive_filtered_topk_plan(
-        spark, sf_small, nq=V12_NQ, seeds=V25_POOL, base_nprobe=serving.SERVING_NPROBE
+        spark, sf_small, nq=V12_NQ, quantizer=SERVING, base_nprobe=serving.SERVING_NPROBE
     )
     # the fixed-nprobe comparator: clamp the budget away so every label
     # serves at exactly the serving nprobe (v27's plan over V12_NQ)
@@ -262,7 +262,7 @@ def test_filtered_dispatch_recall_no_worse_than_fixed_nprobe(spark, sf_small):
     S.FILTERED_SHORTLIST_MULT = 0
     try:
         base = _adaptive_filtered_topk_plan(
-            spark, sf_small, nq=V12_NQ, seeds=V25_POOL, base_nprobe=serving.SERVING_NPROBE
+            spark, sf_small, nq=V12_NQ, quantizer=SERVING, base_nprobe=serving.SERVING_NPROBE
         )
         r_base = _mean_recall(_recall_agg(exact, base.select("qid", "vec_id")))
     finally:

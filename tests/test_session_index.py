@@ -175,6 +175,7 @@ def test_encoding_adjudication_tightness_predicts_winner(spark, sf_small):
     # independent numpy replication: recon MSE 0.62 raw vs 0.80 residual).
     from fifteenmc_spark.operators.similarity import (
         IVF_SEED_IDS,
+        SEED,
         V12_NQ,
         _emb,
         _exact_topk_v12,
@@ -203,7 +204,7 @@ def test_encoding_adjudication_tightness_predicts_winner(spark, sf_small):
     for residual in (False, True):
         got = {
             (r.qid, r.vec_id)
-            for r in _ivfpq_topk_plan(spark, sf_small, V12_NQ, residual=residual)
+            for r in _ivfpq_topk_plan(spark, sf_small, SEED, V12_NQ, residual=residual)
             .select("qid", "vec_id")
             .collect()
         }
@@ -224,6 +225,7 @@ def test_encoding_readjudication_over_trained_cells_is_a_tie(spark, sf_small):
     # this fails and forces the serving re-adjudication v23's docstring
     # describes.
     from fifteenmc_spark.operators.similarity import (
+        TRAINED,
         V12_NQ,
         _exact_topk_v12,
         _ivfpq_topk_plan,
@@ -233,7 +235,7 @@ def test_encoding_readjudication_over_trained_cells_is_a_tie(spark, sf_small):
     )
 
     e = _emb(spark, sf_small).select("vec_id", "embedding")
-    cw = _tivf_centroids(spark, sf_small).select(F.col("cwe").alias("ce"))
+    cw = _tivf_centroids(spark, sf_small, TRAINED).select(F.col("cwe").alias("ce"))
     tightness = (
         e.crossJoin(F.broadcast(cw))
         .select("vec_id", cosine(F.col("embedding"), F.col("ce")).alias("sim"))
@@ -252,7 +254,7 @@ def test_encoding_readjudication_over_trained_cells_is_a_tie(spark, sf_small):
         got = {
             (r.qid, r.vec_id)
             for r in _ivfpq_topk_plan(
-                spark, sf_small, V12_NQ, residual=residual, trained=True
+                spark, sf_small, TRAINED, V12_NQ, residual=residual
             )
             .select("qid", "vec_id")
             .collect()
@@ -289,7 +291,8 @@ def test_spherical_lloyd_strictly_improves_cell_tightness(spark, sf_small):
     # trained centroids (0.185 -> ~0.23 measured at sf0.01) — the direct
     # objective check behind v20's membership-recall gate
     from fifteenmc_spark.operators.similarity import (
-        TIVF_ITERS,
+        SEED,
+        TRAINED,
         _emb,
         _tivf_centroids_plan,
         cosine,
@@ -307,9 +310,65 @@ def test_spherical_lloyd_strictly_improves_cell_tightness(spark, sf_small):
             .first()[0]
         )
 
-    t0 = tightness(_tivf_centroids_plan(spark, sf_small, 0))
-    t2 = tightness(_tivf_centroids_plan(spark, sf_small, TIVF_ITERS))
+    t0 = tightness(_tivf_centroids_plan(spark, sf_small, SEED))
+    t2 = tightness(_tivf_centroids_plan(spark, sf_small, TRAINED))
     assert t2 > t0, (t0, t2)
+
+
+@pytest.mark.parametrize("name", ["SEED", "TRAINED", "SERVING"])
+def test_quantizer_cells_are_numpy_argmax_cosine(spark, sf_small, name):
+    # One cells/probes builder serves every coarse quantizer, the seed
+    # one included (zero Lloyd steps).  Its cell table must equal an
+    # independent numpy argmax-cosine over the gated corpus and that
+    # quantizer's own centroid table, ties to the lower cid; SEED's
+    # centroid table must BE the seed vectors cast to double.
+    import numpy as np
+
+    from fifteenmc_spark.operators import similarity as S
+
+    quantizer = getattr(S, name)
+    cents = sorted(
+        (r["cid"], list(r["cwe"]))
+        for r in S._tivf_centroids(spark, sf_small, quantizer).collect()
+    )
+    assert [c for c, _ in cents] == sorted(quantizer.seeds)
+    emb = S._emb(spark, sf_small).select("vec_id", "embedding").toPandas()
+    if quantizer == S.SEED:
+        seed_vecs = {
+            v: [float(x) for x in e]
+            for v, e in zip(emb["vec_id"], emb["embedding"])
+            if v in quantizer.seeds
+        }
+        assert dict(cents) == seed_vecs
+    X = np.vstack(emb["embedding"].to_numpy()).astype(np.float64)
+    C = np.array([v for _, v in cents], dtype=np.float64)
+    cids = np.array([c for c, _ in cents])
+    sims = (X @ C.T) / np.outer(np.linalg.norm(X, axis=1), np.linalg.norm(C, axis=1))
+    want = dict(zip(emb["vec_id"].tolist(), cids[np.argmax(sims, axis=1)].tolist()))
+    _, cells, _ = S._tivf_cells_probes(spark, sf_small, quantizer, S.N_PROBE)
+    assert {r["vec_id"]: r["cell"] for r in cells.collect()} == want
+
+
+def test_input_checks_raise_rather_than_assert():
+    # input checks must survive python -O, so they raise, not assert
+    from fifteenmc_spark.operators import similarity as S
+
+    with pytest.raises(ValueError, match="validity-gate"):
+        S._gate_oracle("SELECT * FROM t, embeddings")
+    for n in (0, 32):
+        with pytest.raises(ValueError, match="n_planes"):
+            S.lsh_bucket_table(None, n)
+    old = S.RECALL_PLANE_SETS
+    S.RECALL_PLANE_SETS = (8, 4)
+    try:
+        with pytest.raises(ValueError, match="ascending"):
+            S.v6(None, None)
+    finally:
+        S.RECALL_PLANE_SETS = old
+    # residual codes exist only for the 8-cell IVF_SEED_IDS quantizers
+    for q in (S.SERVING, S.Quantizer(S.IVF_SEED_IDS, 1)):
+        with pytest.raises(ValueError, match="residual codes"):
+            S._rpq_index(None, None, q)
 
 
 def test_coarse_quantizer_training_strictly_improves_membership_recall(spark, sf_small):
@@ -338,6 +397,8 @@ def test_trained_cells_strictly_improve_composed_recall(spark, sf_small):
     # re-rank), not just cell membership.  Measured: 67 -> 95 of 250 at
     # sf0.01 (0.27 -> 0.38), numpy-replicated before building.
     from fifteenmc_spark.operators.similarity import (
+        SEED,
+        TRAINED,
         V12_NQ,
         _exact_topk_v12,
         _ivfpq_topk_plan,
@@ -351,7 +412,7 @@ def test_trained_cells_strictly_improve_composed_recall(spark, sf_small):
     for trained in (False, True):
         got = {
             (r.qid, r.vec_id)
-            for r in _ivfpq_topk_plan(spark, sf_small, V12_NQ, trained=trained)
+            for r in _ivfpq_topk_plan(spark, sf_small, TRAINED if trained else SEED, V12_NQ)
             .select("qid", "vec_id")
             .collect()
         }
@@ -398,6 +459,8 @@ def test_nprobe_sweep_matches_standalone_plan_at_every_point(spark, sf_small, sw
     from fifteenmc_spark.operators.relational import QUERIES
     from fifteenmc_spark.operators.similarity import (
         PROBE_SWEEP,
+        SEED,
+        TRAINED,
         V12_NQ,
         _exact_topk_v12,
         _ivfpq_topk_plan,
@@ -414,7 +477,9 @@ def test_nprobe_sweep_matches_standalone_plan_at_every_point(spark, sf_small, sw
     for p in PROBE_SWEEP:
         got = {
             (r.qid, r.vec_id)
-            for r in _ivfpq_topk_plan(spark, sf_small, V12_NQ, trained=trained, nprobe=p)
+            for r in _ivfpq_topk_plan(
+                spark, sf_small, TRAINED if trained else SEED, V12_NQ, nprobe=p
+            )
             .select("qid", "vec_id")
             .collect()
         }

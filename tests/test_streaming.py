@@ -5,6 +5,8 @@ against DuckDB)."""
 
 from __future__ import annotations
 
+import time
+
 import pandas as pd
 import pytest
 from pyspark.sql import Window
@@ -421,12 +423,13 @@ def test_streaming_ann_topk_equals_batch_v5_and_v1(spark, sf_small, tmp_path_fac
         IVF_SEED_IDS,
         N_PROBE,
         N_QUERY_VECS,
+        SEED,
         _emb,
-        _ivf_cells_probes,
+        _tivf_cells_probes,
     )
     from fifteenmc_spark.streaming import ann as ANN
 
-    e, cells, _ = _ivf_cells_probes(spark, sf_small, N_PROBE)
+    e, cells, _ = _tivf_cells_probes(spark, sf_small, SEED, N_PROBE)
     corpus = e.select("vec_id", "embedding")
     centroids = [
         (r["vec_id"], list(r["embedding"]))
@@ -512,7 +515,7 @@ def test_streaming_ann_serves_the_serving_layout(spark, sf_small, tmp_path_facto
     over 16 cells at equal scan, and online queries get that recall
     because the default IS that layout."""
     from fifteenmc_spark import serving
-    from fifteenmc_spark.operators.similarity import N_QUERY_VECS, _emb, _tivf_topk_plan
+    from fifteenmc_spark.operators.similarity import SERVING, N_QUERY_VECS, _emb, _tivf_topk_plan
     from fifteenmc_spark.streaming import ann as ANN
 
     e, tcells, _ = serving.serving_cells_probes(spark, sf_small)
@@ -524,7 +527,7 @@ def test_streaming_ann_serves_the_serving_layout(spark, sf_small, tmp_path_facto
     want = {
         (r["qid"], r["vec_id"], r["rnk"], round(r["sim"], 4))
         for r in _tivf_topk_plan(
-            spark, sf_small, serving.SERVING_NPROBE, serving.serving_seeds()
+            spark, sf_small, SERVING, serving.SERVING_NPROBE
         ).collect()
     }
     assert want
@@ -700,18 +703,19 @@ def test_streaming_pq_adc_serving_equals_batch(spark, sf_small, tmp_path_factory
         IVF_SEED_IDS,
         N_PROBE,
         N_QUERY_VECS,
+        SEED,
         TOP_K,
         _emb,
-        _ivf_cells_probes,
         _pq_index,
         _pq_query_side,
+        _tivf_cells_probes,
     )
     from fifteenmc_spark.streaming import pq_ann as PQA
 
     # batch twin: v13's candidate ADC ranking (oracle-checked shape),
     # top-k by (approx desc, vec_id) without the exact re-rank
     e, cw, codes = _pq_index(spark, sf_small)
-    _, cells, probes = _ivf_cells_probes(spark, sf_small, N_PROBE)
+    _, cells, probes = _tivf_cells_probes(spark, sf_small, SEED, N_PROBE)
     q, qparts = _pq_query_side(e, cw, N_QUERY_VECS)
     cand = (
         cells.join(probes.select("qid", "cell"), "cell")
@@ -744,7 +748,7 @@ def test_streaming_pq_adc_serving_equals_batch(spark, sf_small, tmp_path_factory
     # stream side: same artifacts through the serving layout — the SEED
     # cells are the calibration baseline now, so this test names them
     # explicitly (the serving default is the trained quantizer)
-    static, books = PQA.build_pq_serving_index(spark, sf_small, N_PROBE, quantizer="seed")
+    static, books = PQA.build_pq_serving_index(spark, sf_small, N_PROBE, quantizer=SEED)
     assert "embedding" not in static.columns  # codes-only static side
     centroids = [
         (r["vec_id"], list(r["embedding"]))
@@ -788,7 +792,7 @@ def test_streaming_pq_adc_serves_the_serving_layout(spark, sf_small, tmp_path_fa
     # the codes-only serving tier's DEFAULT layout: built with no
     # quantizer argument it serves the SERVING layout (trained coarse
     # cells x raw PQ codes at the constant scan fraction —
-    # serving.DEFAULT_QUANTIZER + SERVING_NCELLS), and the stream top-k
+    # the SERVING quantizer, SERVING_NCELLS cells), and the stream top-k
     # equals the batch ADC ranking over those probed cells — the online
     # form of the index the r10-r12 evals picked, now the default
     from pyspark.sql import Window as W2
@@ -796,6 +800,7 @@ def test_streaming_pq_adc_serves_the_serving_layout(spark, sf_small, tmp_path_fa
     from fifteenmc_spark import serving
     from fifteenmc_spark.operators.similarity import (
         N_QUERY_VECS,
+        SERVING,
         TOP_K,
         _emb,
         _pq_index,
@@ -804,12 +809,10 @@ def test_streaming_pq_adc_serves_the_serving_layout(spark, sf_small, tmp_path_fa
     )
     from fifteenmc_spark.streaming import pq_ann as PQA
 
-    assert serving.DEFAULT_QUANTIZER == "trained"
+    assert SERVING.iters > 0  # the serving quantizer is a trained one
     N_PROBE = serving.SERVING_NPROBE
     e, cw, codes = _pq_index(spark, sf_small)
-    _, tcells, tprobes = _tivf_cells_probes(
-        spark, sf_small, N_PROBE, seeds=serving.serving_seeds()
-    )
+    _, tcells, tprobes = _tivf_cells_probes(spark, sf_small, SERVING, N_PROBE)
     q, qparts = _pq_query_side(e, cw, N_QUERY_VECS)
     cand = (
         tcells.join(tprobes.select("qid", "cell"), "cell")
@@ -969,3 +972,36 @@ def test_await_drained_stops_stateful_availablenow_promptly(spark, sf_small, tmp
     elapsed = time.monotonic() - t0
     assert elapsed < 90.0, f"stateful drain took {elapsed:.1f}s — timeout regression"
     assert spark.table("sink_await_drained").count() > 0
+
+
+class _NeverDrainingQuery:
+    """Spark-free stand-in for a StreamingQuery that stays active and
+    never reports progress until stopped; records every timeout it is
+    asked to wait, and sleeps it while active like a real wait."""
+
+    def __init__(self):
+        self.isActive = True
+        self.lastProgress = None
+        self.waits: list[float] = []
+
+    def awaitTermination(self, timeout):
+        self.waits.append(timeout)
+        if self.isActive:
+            time.sleep(timeout)
+        return not self.isActive
+
+    def stop(self):
+        self.isActive = False
+
+
+def test_await_drained_final_wait_uses_the_remaining_budget():
+    """await_drained's whole call is bounded by ONE timeout_s: once the
+    polling loop has spent the budget, the wait after stop() gets only
+    what is left (floored at a small positive value), not a second full
+    timeout_s."""
+    q = _NeverDrainingQuery()
+    timeout_s = 1.0
+    W.await_drained(q, timeout_s)
+    assert not q.isActive
+    assert 0 < q.waits[-1] < timeout_s, q.waits
+    assert sum(q.waits) < timeout_s + 0.5, q.waits
