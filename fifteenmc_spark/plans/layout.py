@@ -24,11 +24,20 @@ Scale shape
 - ``read_zorder_bbox`` enumerates the 4^levels quadtree cells driver-side
   (bounded, tiny — 4^6 = 4,096 at most here), keeps the ones whose extent
   intersects the query box (widened by one quantum so float rounding can
-  only ADD a cell, never drop one), and scans with ``zp IN (...)`` — a
-  partition filter, so pruning happens at file-listing time — plus the
-  exact residual lon/lat predicate.  False-positive cells cost one extra
-  partition read; correctness never depends on the cell math because the
-  residual filter is exact.
+  only ADD a cell, never drop one), and builds its reader over ONLY those
+  cells' ``zp=`` directories: one glob ``<root>/zp={c1,c2,...}`` read with
+  ``basePath=<root>``, so ``zp`` stays a partition column.  Pruning thus
+  happens at file-listing time, when the reader is built: a reader over
+  the root would list every ``zp=`` directory first, and past Spark's
+  ``parallelPartitionDiscovery.threshold`` (32 paths) that listing is a
+  Spark job of its own, paid on every query only to discard most of what
+  it listed.  The scan keeps ``zp IN (...)`` as a partition filter plus
+  the exact residual lon/lat predicate, so the rows are those of a
+  full-scan bbox filter by construction.  False-positive cells cost one
+  extra partition read; correctness never depends on the cell math
+  because the residual filter is exact.  When no intersecting cell holds
+  rows (a box over empty space), the glob matches nothing and the reader
+  falls back to a root read, whose partition filter then yields no rows.
 - At 100 TB with ``levels=6`` a city-block query reads a handful of the
   4,096 directories instead of the whole table; the curve keeps nearby
   boxes in nearby files, so the OS/page-cache locality story holds too.
@@ -36,6 +45,7 @@ Scale shape
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -178,15 +188,28 @@ def read_zorder_bbox(
     bits: int = ZORDER_BITS,
     levels: int = ZORDER_LEVELS,
 ) -> DataFrame:
-    """bbox read over a :func:`write_zorder_layout` table: ``zp IN (cells)``
-    is a PARTITION filter (pruned at file listing), the lon/lat residual is
-    exact — so the result equals a full-scan bbox filter while reading only
-    the curve cells the box touches."""
+    """bbox read over a :func:`write_zorder_layout` table, equal to a
+    full-scan bbox filter while reading only the curve cells the box
+    touches.
+
+    The reader is built over the intersecting cells' ``zp=`` directories
+    alone (one glob, ``basePath`` = the layout root), so listing never
+    visits the other cells; ``zp IN (cells)`` stays on as the partition
+    filter and the lon/lat residual is exact.  If none of those cells was
+    ever written, the glob raises ``PATH_NOT_FOUND`` and the read falls
+    back to the layout root, where the same filters return no rows (and a
+    missing root fails); any other error propagates."""
     qminlon, qminlat, qmaxlon, qmaxlat = query_bbox
     cells = zprefixes_for_bbox(query_bbox, layout_bbox, bits, levels)
+    glob = f"{path.rstrip('/')}/zp={{{','.join(map(str, cells))}}}"
+    try:
+        df = spark.read.option("basePath", path).parquet(glob)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        df = spark.read.parquet(path)
     return (
-        spark.read.parquet(path)
-        .where(F.col("zp").isin(cells))
+        df.where(F.col("zp").isin(cells))
         .where(
             (F.col(lon_col) >= qminlon)
             & (F.col(lon_col) < qmaxlon)

@@ -70,9 +70,14 @@ def build_all(
         if elements is None:
             raise ValueError("need elements or pois_raw")
         pois_raw = poi.classify_pois(elements)
-    pois_snapped = snap.snap_points_to_nodes(pois_raw, gnodes, max_snap_m=max_snap_m)
+    # cached like the graph tables: write_gold reads each of these twice
+    # (its own table and reach_summary), which would otherwise rerun the
+    # POI snap and the bounded solve per read
+    pois_snapped = snap.snap_points_to_nodes(pois_raw, gnodes, max_snap_m=max_snap_m).cache()
 
-    reach_df = reach.compute_reach(gnodes, gedges, pois_snapped.where("node_idx IS NOT NULL"), limit_m=limit_m)
+    reach_df = reach.compute_reach(
+        gnodes, gedges, pois_snapped.where("node_idx IS NOT NULL"), limit_m=limit_m
+    ).cache()
     summary = reach.reach_summary(reach_df, pois_snapped, gnodes, limit_m)
     return GoldTables(tiles, gnodes, gedges, pois_snapped, reach_df, summary)
 

@@ -327,7 +327,14 @@ def path_to_nearest_poi(
         .where(geo.sanitize_key(F.col("category")) == key)
         .select("node_idx", F.lit(category).alias("category"), "poi_id")
     )
-    sp = reach_mod.shortest_paths_bounded(edges, seeds, limit_m=limit_m, track_prev=True)
+    # checkpointed so the solve runs once: the tip lookup materializes sp
+    # and the backtrack reads it.  Lazily, so a query that finds no POI
+    # pays no extra job.  Nothing returned references sp (the chain is
+    # collected); its blocks go when it is garbage-collected, like the
+    # backtrack's own checkpoints.
+    sp = reach_mod.shortest_paths_bounded(
+        edges, seeds, limit_m=limit_m, track_prev=True
+    ).localCheckpoint(eager=False)
 
     # the settled state never reaches the driver: one row for the start
     # node, then the O(path) pointer-doubling backtrack

@@ -3,8 +3,11 @@
 from __future__ import annotations
 
 import os
+import uuid
+from urllib.parse import urlparse
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from fifteenmc_spark.plans import layout
@@ -92,8 +95,9 @@ def test_zorder_read_prunes_partitions(spark, layout_dir):
     pruning is the layout's whole point — and the cell filter must reach
     the scan as a partition filter, not a post-scan predicate."""
     def files_read(df):
-        # inputFiles() lists the relation BEFORE partition pruning; the
-        # files the scan actually touches are observable at execution
+        # a root reader's inputFiles() lists every file (its partition
+        # filter prunes later, in the scan); the files the scan actually
+        # touches are observable at execution
         return {r["f"] for r in df.select(F.input_file_name().alias("f")).distinct().collect()}
 
     full_files = files_read(spark.read.parquet(layout_dir))
@@ -108,6 +112,17 @@ def test_zorder_read_prunes_partitions(spark, layout_dir):
     )
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "zp" in plan
+    # the bbox reader is built over the intersecting cells alone, so its
+    # own file listing already holds exactly those cells' files
+    want = {
+        os.path.join(root, f)
+        for c in cells
+        for root, _, fs in os.walk(os.path.join(layout_dir, f"zp={c}"))
+        for f in fs
+        if f.endswith(".parquet")
+    }
+    assert want and {urlparse(f).path for f in pruned.inputFiles()} == want
+    assert {urlparse(f).path for f in pruned_files} == want
 
 
 def test_zorder_cell_enumeration_never_misses(spark):
@@ -174,15 +189,44 @@ def test_zorder_read_beyond_layout_edge_returns_clamped_rows(spark, tmp_path_fac
         "point_id int, lon double, lat double",
     )  # 2 and 3 lie outside BBOX's lon extent on either side
     layout.write_zorder_layout(pts, d, BBOX)
+    empty_box = (18.45, 54.22, 18.50, 54.25)  # SW cells, none written
+    assert not any(
+        os.path.isdir(os.path.join(d, f"zp={c}"))
+        for c in layout.zprefixes_for_bbox(empty_box, BBOX)
+    )
     for qbox, want in (
         ((19.60, 54.30, 19.80, 54.40), [2]),   # wholly east of the layout
         ((17.00, 54.30, 17.30, 54.40), [3]),   # wholly west
         ((18.55, 54.30, 18.65, 54.40), [1]),   # interior control
+        (empty_box, []),                       # no cell dir: root-read fallback
     ):
         got = sorted(
             r["point_id"] for r in layout.read_zorder_bbox(spark, d, qbox, BBOX).collect()
         )
         assert got == want, (qbox, got, want)
+
+
+def test_zorder_read_missing_root_raises(spark, tmp_path):
+    """Only a cell glob that matches nothing falls back to the root read;
+    a layout root that does not exist still fails the read."""
+    with pytest.raises(AnalysisException) as e:
+        layout.read_zorder_bbox(spark, str(tmp_path / "no_layout"), QUERY_BOX, BBOX)
+    assert e.value.getCondition() == "PATH_NOT_FOUND"
+
+
+def _jobs_launched(spark, fn) -> int:
+    """Spark jobs started while ``fn()`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job starts reach the status store through the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 # ---------------------------------------------------------------------------
@@ -264,6 +308,26 @@ def test_zordered_snap_prunes_files(spark, geo_layout):
     assert len(pruned_files) <= len(full_files) // 2, (
         f"{len(pruned_files)}/{len(full_files)} files for a 60 m disc"
     )
+
+
+def test_zordered_disc_reader_skips_the_listing_job(spark, geo_layout):
+    """Building the disc reader lists only the cells under the disc.  The
+    fixture populates more zp= directories than Spark's 32-path
+    parallel-listing threshold, so a reader over the layout root pays a
+    listing job on top of the schema-inference job; the disc reader pays
+    at most the schema job."""
+    from fifteenmc_spark.plans import snap
+
+    cells = [d for d in os.listdir(geo_layout["path"]) if d.startswith("zp=")]
+    assert len(cells) > 32, len(cells)
+    assert _jobs_launched(spark, lambda: spark.read.parquet(geo_layout["path"])) >= 2
+    minlon, minlat, maxlon, maxlat = geo_layout["bbox"]
+    lon, lat = (minlon + maxlon) / 2, (minlat + maxlat) / 2
+    n = _jobs_launched(
+        spark,
+        lambda: snap.read_zordered_disc(spark, geo_layout["path"], geo_layout["bbox"], lon, lat, 60.0),
+    )
+    assert n <= 1, n
 
 
 def test_zordered_point_reachability_equals_full_scan(spark, geo_layout):

@@ -211,6 +211,9 @@ def test_pipeline_end_to_end(spark, tmp_path):
         pois_raw=spark.createDataFrame(pois_pdf),
         limit_m=1000.0,
     )
+    # write_gold reads reach and pois twice each (their own tables and
+    # reach_summary): cached, the snap and the bounded solve run once
+    assert g.reach.is_cached and g.pois.is_cached
     base = str(tmp_path / "gold")
     pipeline.write_gold(g, base)
 
